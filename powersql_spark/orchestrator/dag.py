@@ -61,8 +61,3 @@ def build_graph(deps: dict[str, list[str]]) -> dict[str, ModelNode]:
 def topo_order(deps: dict[str, list[str]]) -> list[str]:
     """Full topological order (parents before children)."""
     return list(TopologicalSorter(deps).static_order())
-
-
-def ready_models(graph: dict[str, ModelNode]) -> list[str]:
-    """Models with no unbuilt parents — the initial Kahn ready set."""
-    return [name for name, node in graph.items() if node.live_parents == 0]

@@ -17,16 +17,29 @@ Materialization semantics:
 At scale the parquet write IS the point: a TABLE AS model is a
 checkpoint that downstream models re-scan columnar with pushdown,
 instead of recomputing the view chain.
+
+A TABLE is registered from a schema already known: after the write,
+the written DataFrame's; on restore (``test``, ``run --changed``), the
+one Spark stored in the target's parquet footer. Either way the
+read-back launches no schema-inference job (Spark's one-task footer
+scan per bare ``spark.read.parquet``), and the registered schema is the
+same, since a user schema is made nullable exactly as an inferred one.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from powersql_spark.orchestrator.sqlparse import Model
+
+# Footer key under which Spark's parquet writer stores the row schema.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class SparkExecutor:
@@ -43,10 +56,24 @@ class SparkExecutor:
             )
         elif model.kind == "table":
             path = os.path.join(self.target_dir, model.name)
-            self.spark.sql(model.query).write.mode("overwrite").parquet(path)
-            self.spark.read.parquet(path).createOrReplaceTempView(model.name)
+            df = self.spark.sql(model.query)
+            df.write.mode("overwrite").parquet(path)
+            reader = self.spark.read.schema(df.schema)
+            reader.parquet(path).createOrReplaceTempView(model.name)
         else:  # pragma: no cover
             raise ValueError(f"unknown model kind: {model.kind}")
+
+    def restore(self, model: Model) -> None:
+        """Re-register a model without recomputing it: a TABLE whose
+        parquet target exists is read back; anything else is executed
+        (a view is lazy, a TABLE without a target is materialized)."""
+        path = os.path.join(self.target_dir, model.name)
+        if model.kind != "table" or not os.path.isdir(path):
+            self.execute(model)
+            return
+        schema = _stored_schema(path)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        reader.parquet(path).createOrReplaceTempView(model.name)
 
     def analyze(self, model: Model) -> DataFrame:
         """Analysis only — no job runs. Spark's analyzer is the type
@@ -63,8 +90,24 @@ class SparkExecutor:
         row = self.spark.sql(f"SELECT ({condition}) AS condition").first()
         return bool(row[0]) if row is not None and row[0] is not None else False
 
-    def drop(self, name: str) -> None:
-        self.spark.catalog.dropTempView(name)
+
+def _stored_schema(path: str) -> StructType | None:
+    """The schema Spark wrote into the footer of the target's first part
+    file, or None (no part file, a footer without Spark's key, or one
+    pyarrow cannot read): the caller then lets Spark infer, which also
+    raises today's errors for an empty or corrupt target."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    parts = sorted(glob.glob(os.path.join(path, "part-*.parquet")))
+    if not parts:
+        return None
+    try:
+        meta = pq.read_metadata(parts[0]).metadata or {}
+    except (OSError, pa.ArrowException):
+        return None
+    stored = meta.get(_SPARK_SCHEMA_KEY)
+    return StructType.fromJson(json.loads(stored)) if stored else None
 
 
 def _q(name: str) -> str:

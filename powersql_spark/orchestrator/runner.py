@@ -11,7 +11,6 @@ the free orchestration-level win the reference leaves on the table
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -263,12 +262,7 @@ def run(
             needed |= _ancestor_closure(project.deps, name)
         for name in project.order:
             if name in needed and name not in keep:
-                m = project.models[name]
-                path = os.path.join(ex.target_dir, m.name)
-                if m.kind == "table" and os.path.isdir(path):
-                    spark.read.parquet(path).createOrReplaceTempView(m.name)
-                else:
-                    ex.execute(m)
+                ex.restore(project.models[name])
     if not parallel:
         for name in order:
             ex.execute(project.models[name])
@@ -311,9 +305,7 @@ def run(
     return done
 
 
-def _restore_models(
-    spark: SparkSession, project: Project, ex: SparkExecutor
-) -> None:
+def _restore_models(project: Project, ex: SparkExecutor) -> None:
     """Re-register models in a fresh session.
 
     The reference's backend is a persistent warehouse, so `test` sees
@@ -321,18 +313,8 @@ def _restore_models(
     lazy — re-creating them is free; TABLE models load from the parquet
     target written by `run` (falling back to materializing if absent).
     """
-    import os
-
     for name in project.order:
-        model = project.models[name]
-        if model.kind == "table":
-            path = os.path.join(ex.target_dir, model.name)
-            if os.path.isdir(path):
-                spark.read.parquet(path).createOrReplaceTempView(model.name)
-            else:
-                ex.execute(model)
-        else:
-            ex.execute(model)
+        ex.restore(project.models[name])
 
 
 def test(
@@ -346,7 +328,7 @@ def test(
     project = load_project(project_dir)
     _register_sources(spark, sources, project)
     ex = SparkExecutor(spark, Path(project_dir) / "target")
-    _restore_models(spark, project, ex)
+    _restore_models(project, ex)
     exit_code = 0
     for t in project.tests:
         ok = ex.query_bool(t.condition)

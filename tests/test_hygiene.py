@@ -41,6 +41,13 @@ def test_local_dirs_respects_shm_free_space(monkeypatch):
     from powersql_spark import session as s
 
     monkeypatch.delenv("SPARK_GRAFT_LOCAL_DIR", raising=False)
+    # _local_dirs checks for a writable /dev/shm before statvfs; pretend
+    # it has one, so the test does not depend on the host's mounts.
+    isdir, access = os.path.isdir, os.access
+    monkeypatch.setattr(os.path, "isdir", lambda p: p == "/dev/shm" or isdir(p))
+    monkeypatch.setattr(
+        os, "access", lambda p, mode: p == "/dev/shm" or access(p, mode)
+    )
 
     class Tiny:
         f_bavail = 1024

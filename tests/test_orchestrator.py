@@ -519,18 +519,23 @@ def test_run_changed_new_model_runs_and_banks(spark, tmp_path):
     assert "extra" not in _load_manifest(tmp_path)
 
 
-def test_wide_example_runs_parallel_and_serial(spark):
+def test_wide_example_runs_parallel_and_serial(spark, tmp_path):
     """The examples/wide DAG (orchestrator bench fixture: 8 independent
     table models + fan-in summary) must produce identical results in
-    both modes."""
+    both modes. Runs on a copy, so no target/ is left in the checkout."""
     import os
 
     from powersql_spark.orchestrator.runner import run
 
-    project = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "examples",
-        "wide",
+    project = tmp_path / "wide"
+    shutil.copytree(
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "examples",
+            "wide",
+        ),
+        project,
+        ignore=shutil.ignore_patterns("target"),
     )
     serial = run(spark, project)
     n_serial = spark.table("summary").collect()[0]
@@ -540,3 +545,157 @@ def test_wide_example_runs_parallel_and_serial(spark):
     assert len(serial) == 9
     assert serial[-1] == "summary" == parallel[-1]
     assert n_serial == n_parallel
+
+
+# ---------- TABLE registration from a known schema ----------
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches: the scheduler hands out job ids in
+    order, synchronously on submission."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = int(scheduler.nextJobId())
+    fn()
+    return int(scheduler.nextJobId()) - before
+
+
+def test_restore_launches_no_spark_job(spark):
+    """TABLE models register from their known schema: restoring the
+    models `run` built launches no job at all (no footer-inference job),
+    and materializing a TABLE launches only the jobs of its write."""
+    from powersql_spark.orchestrator.executor import SparkExecutor
+    from powersql_spark.orchestrator.runner import (
+        _restore_models,
+        load_project,
+        run,
+    )
+
+    run(spark, PROJECT, sources=SOURCES)
+    project = load_project(PROJECT)
+    ex = SparkExecutor(spark, f"{PROJECT}/target")
+    assert "table" in {m.kind for m in project.models.values()}
+    assert _jobs_launched(spark, lambda: _restore_models(project, ex)) == 0
+
+    table = project.models["top_products"]
+    write_only = _jobs_launched(
+        spark,
+        lambda: spark.sql(table.query)
+        .write.mode("overwrite")
+        .parquet(f"{PROJECT}/target/_write_only"),
+    )
+    assert _jobs_launched(spark, lambda: ex.execute(table)) == write_only
+
+
+_TYPED_MODELS = {
+    "typed": (
+        "CREATE TABLE typed AS SELECT n_nationkey AS k,"
+        " CAST(n_name AS CHAR(5)) AS c5,"
+        " CAST(substr(n_name, 1, 3) AS VARCHAR(3)) AS v3,"
+        " CAST(n_nationkey * 1.25 AS DECIMAL(20,4)) AS dec,"
+        " TIMESTAMP'2024-01-02 03:04:05' + make_interval(0, 0, 0, n_nationkey) AS ts,"
+        " TIMESTAMP_NTZ'2024-01-02 03:04:05' AS ts_ntz,"
+        " DATE'2024-01-02' + n_nationkey AS d,"
+        " named_struct('a', n_regionkey, 'b', array(1.5D, 2.5D)) AS st,"
+        " array(n_nationkey, NULL) AS arr,"
+        " map(n_name, n_regionkey) AS m,"
+        " CAST(n_name AS BINARY) AS bin,"
+        " CAST(NULL AS STRING) AS all_null,"
+        " n_regionkey AS `Region Key`,"
+        " n_name AS MixedCase"
+        " FROM nation"
+    ),
+    "typed_empty": "CREATE TABLE typed_empty AS SELECT * FROM typed WHERE k < 0",
+    "consumer": (
+        "CREATE VIEW consumer AS SELECT COUNT(*) AS n"
+        " FROM typed t LEFT JOIN typed_empty e ON t.k = e.k"
+    ),
+}
+
+
+def _assert_registered_as_inferred(spark, project_dir, names):
+    for name in names:
+        inferred = spark.read.parquet(str(project_dir / "target" / name))
+        registered = spark.table(name)
+        assert registered.schema == inferred.schema, name
+        assert (
+            registered.orderBy("k").collect() == inferred.orderBy("k").collect()
+        ), name
+
+
+def test_table_registration_keeps_inferred_schema(spark, tmp_path):
+    """Registering a TABLE from its known schema (the written DataFrame's
+    after `run`, the footer's on `test` and `run --changed` restores)
+    gives exactly the schema and rows Spark's own inference gives."""
+    from pyspark.sql.types import DecimalType, TimestampNTZType
+
+    from powersql_spark.orchestrator.runner import run, test as run_tests
+
+    (tmp_path / "powersql.toml").write_text(
+        '[project]\nname = "typed"\nmodels = ["models"]\ntests = ["tests"]\n'
+    )
+    (tmp_path / "models").mkdir()
+    for name, sql in _TYPED_MODELS.items():
+        (tmp_path / "models" / f"{name}.sql").write_text(sql)
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "t.sql").write_text(
+        "ASSERT (SELECT COUNT(*) FROM typed) = 25 AS 'every nation';\n"
+        "ASSERT NOT EXISTS (SELECT 1 FROM typed_empty) AS 'empty'"
+    )
+    tables = ("typed", "typed_empty")
+
+    run(spark, tmp_path, sources=SOURCES)
+    _assert_registered_as_inferred(spark, tmp_path, tables)
+    schema = spark.table("typed").schema
+    assert schema["dec"].dataType == DecimalType(20, 4)
+    assert schema["ts_ntz"].dataType == TimestampNTZType()
+    assert spark.table("typed").count() == 25
+
+    for name in tables:
+        spark.catalog.dropTempView(name)
+    assert run_tests(spark, tmp_path, sources=SOURCES) == 0
+    _assert_registered_as_inferred(spark, tmp_path, tables)
+
+    for name in tables:
+        spark.catalog.dropTempView(name)
+    (tmp_path / "models" / "consumer.sql").write_text(
+        _TYPED_MODELS["consumer"].replace("COUNT(*)", "COUNT(*) + 0")
+    )
+    assert run(spark, tmp_path, sources=SOURCES, changed=True) == ["consumer"]
+    _assert_registered_as_inferred(spark, tmp_path, tables)
+    assert spark.table("consumer").collect()[0]["n"] == 25
+
+
+def test_restore_falls_back_to_inference(spark, tmp_path):
+    """A target without Spark's footer schema (written by pyarrow)
+    restores through inference; a target with no part file, or with one
+    that is not parquet, raises Spark's error as bare inference does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import AnalysisException
+
+    from powersql_spark.orchestrator.executor import SparkExecutor, _stored_schema
+    from powersql_spark.orchestrator.sqlparse import Model
+
+    ex = SparkExecutor(spark, tmp_path)
+    (tmp_path / "arrow_t").mkdir()
+    pq.write_table(
+        pa.table({"a": [1, 2], "b": ["x", None]}),
+        tmp_path / "arrow_t" / "part-00000.parquet",
+    )
+    assert _stored_schema(str(tmp_path / "arrow_t")) is None
+    ex.restore(Model("arrow_t", "table", "SELECT 0 AS a", ""))
+    inferred = spark.read.parquet(str(tmp_path / "arrow_t"))
+    assert spark.table("arrow_t").schema == inferred.schema
+    assert sorted(spark.table("arrow_t").collect()) == sorted(inferred.collect())
+    assert spark.table("arrow_t").count() == 2  # read back, not re-executed
+
+    (tmp_path / "no_parts").mkdir()
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        ex.restore(Model("no_parts", "table", "SELECT 0 AS a", ""))
+
+    (tmp_path / "corrupt").mkdir()
+    (tmp_path / "corrupt" / "part-00000.parquet").write_bytes(b"not parquet")
+    assert _stored_schema(str(tmp_path / "corrupt")) is None
+    with pytest.raises(Py4JJavaError, match="SparkException"):
+        ex.restore(Model("corrupt", "table", "SELECT 0 AS a", ""))

@@ -5,10 +5,13 @@ The reference executes models strictly serially (src/main.rs:400-413);
 ``run(parallel=True)`` submits ready models concurrently from a thread
 pool, which overlaps independent Spark jobs. This script times both
 modes back to back on the same session (one warmup run first so JIT /
-file-listing costs don't bias either side) and prints one JSON line.
+file-listing costs don't bias either side), then ``test`` against what
+they built, and prints one JSON line: seconds per command, the parallel
+speedup, and the Spark jobs each command launched.
 """
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -18,7 +21,7 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-from powersql_spark.orchestrator.runner import run  # noqa: E402
+from powersql_spark.orchestrator.runner import run, test  # noqa: E402
 from powersql_spark.session import build_session  # noqa: E402
 
 PROJECT = os.path.join(
@@ -34,15 +37,27 @@ def main() -> int:
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
         shuffle_partitions=8,
     )
+    # The scheduler numbers jobs in order as they are submitted, so the
+    # id range a command spans counts its jobs, pool threads included.
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     run(spark, PROJECT)  # warmup (codegen, file listing)
-    times = {}
+    times, jobs = {}, {}
+
+    def timed(name, fn):
+        j0, t0 = int(scheduler.nextJobId()), time.time()
+        out = fn()
+        times[name] = round(time.time() - t0, 3)
+        jobs[name] = int(scheduler.nextJobId()) - j0
+        return out
+
     for mode, par in (("serial", False), ("parallel", True)):
-        t0 = time.time()
-        order = run(spark, PROJECT, parallel=par)
-        times[mode] = round(time.time() - t0, 3)
+        order = timed(mode, lambda: run(spark, PROJECT, parallel=par))
         assert len(order) == 9, order
+    with contextlib.redirect_stdout(sys.stderr):  # one OK line per ASSERT
+        rc = timed("test", lambda: test(spark, PROJECT))
+    assert rc == 0, rc
     times["speedup"] = round(times["serial"] / times["parallel"], 2)
-    print(json.dumps(times))
+    print(json.dumps({**times, "jobs": jobs}))
     spark.stop()
     return 0
 
