@@ -3917,9 +3917,11 @@ def analytics_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hashed-relation build + broadcast that defeats the
     # co-partitioning (measured 0.89 -> 0.60 s median at sf0.1/32
     # cores under the bench protocol; rows tuple-identical). The build
-    # side of each task is one ok-partition — bounded by basket size,
-    # no OOM risk at any scale, and the hint keeps this shape where a
-    # broadcast would be impossible anyway.
+    # side of each task is every basket hashed to that shuffle
+    # partition (not one basket), and a shuffled-hash build relation
+    # cannot spill: it stays in memory only while n_parts grows with
+    # the item volume (here it is the core count). The hint keeps this
+    # shape where a broadcast would be impossible anyway.
     pair_n = (
         a.join(
             b.hint("shuffle_hash"),

@@ -62,7 +62,10 @@ def dsum_grid(col: str | Column, alias: str) -> Column:
     The decimal(28,0) sum accumulator keeps the identical 10^22
     value-headroom of dsum's decimal(28,6), so overflow behaviour at
     100 TB is unchanged. Use ONLY with a per-site grid proof (see
-    :func:`_grid_unscaled`); arbitrary doubles must keep dsum."""
+    :func:`_grid_unscaled`); arbitrary doubles must keep dsum. The
+    proof is tests/test_semantics.py::test_dsum_grid_identical_to_dsum:
+    extend its case list with every expression converted to this
+    path, since off-grid doubles round differently here."""
     c = F.col(col) if isinstance(col, str) else col
     return _grid_back(F.sum(_grid_unscaled(c))).alias(alias)
 

@@ -26,7 +26,7 @@ _TOKEN_RE = re.compile(
     r"""
       (?P<comment>--[^\n]*|/\*.*?\*/)
     | (?P<string>'(?:[^']|'')*')
-    | (?P<qident>"(?:[^"]|"")*")
+    | (?P<qident>"(?:[^"]|"")*"|`(?:[^`]|``)*`)
     | (?P<word>[A-Za-z_][A-Za-z0-9_$]*)
     | (?P<number>\d+(?:\.\d*)?|\.\d+)
     | (?P<punct>[^\sA-Za-z0-9_$])
@@ -127,16 +127,21 @@ class Test:
     message: str
 
 
+def _unquote(name: str) -> str:
+    """Strip ANSI "..." or Spark `...` identifier quotes, undoubling."""
+    q = name[0]
+    return name[1:-1].replace(q + q, q)
+
+
 def _ident_text(tok: Token) -> str:
-    if tok.kind == "qident":
-        return tok.text[1:-1].replace('""', '"')
-    return tok.text
+    return _unquote(tok.text) if tok.kind == "qident" else tok.text
 
 
 _MODEL_RE = re.compile(
     r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?"
     r"(?P<mat>MATERIALIZED\s+)?(?P<kind>VIEW|TABLE)\s+"
-    r'(?P<name>"(?:[^"]|"")*"|[A-Za-z_][A-Za-z0-9_$.]*)\s+AS\s+(?P<query>.*)$',
+    r'(?P<name>"(?:[^"]|"")*"|`(?:[^`]|``)*`|[A-Za-z_][A-Za-z0-9_$.]*)'
+    r"\s+AS\s+(?P<query>.*)$",
     re.IGNORECASE | re.DOTALL,
 )
 
@@ -155,8 +160,8 @@ def parse_model_statement(stmt: str) -> Model:
     if kind == "view" and m.group("mat"):
         kind = "materialized_view"
     name = m.group("name")
-    if name.startswith('"'):
-        name = name[1:-1].replace('""', '"')
+    if name[0] in '"`':
+        name = _unquote(name)
     return Model(name=name, kind=kind, query=m.group("query").strip(), sql=stmt)
 
 

@@ -1051,8 +1051,12 @@ def ts_theilsen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is the identical lower-median order statistic whatever order
     # collect_list saw (verified tuple-identical, 1500 rows;
     # interleaved A/B 0.493 -> 0.383 s median). Per-group state is the
-    # L^2 slope array — the same per-entity bound the window's sort
-    # buffer had.
+    # L^2 slope array: the same per-entity SIZE as the window's sort
+    # buffer, but not the same failure mode. The window's sort buffer
+    # spills to disk; this collect_list array is an aggregation buffer
+    # held whole in executor memory and cannot spill, so one entity
+    # with an unbounded history can OOM a task where the window form
+    # would have spilled. Safe while per-entity histories stay bounded.
     agg = pairs.groupBy("user_id").agg(
         F.sort_array(F.collect_list("slope")).alias("arr")
     )
@@ -1330,7 +1334,9 @@ def ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sort+buffer passes per median. Inputs are non-null by
     # construction (value filtered; d = abs over non-nulls), so
     # collect_list's null-dropping cannot diverge from the window's
-    # null ranking. Per-group state is the bounded per-entity history.
+    # null ranking. Per-group state is the bounded per-entity history,
+    # held in an aggregation buffer that, unlike the window's sort
+    # buffer, cannot spill.
     def lower_median(df, col, out):
         agg = df.groupBy("user_id").agg(
             F.sort_array(F.collect_list(col)).alias("arr")

@@ -36,834 +36,6 @@ class QuerySpec:
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
-# ---------------------------------------------------------------------------
-# Driver-window ordering.
-#
-# The driver verifies queries() in iteration order and (empirically, round 1)
-# checks only a bounded prefix — CORRECTNESS_r01.json holds exactly the first
-# 50 registered keys. Registration order therefore decides which keys get a
-# driver-green row each round, so it is a curated manifest, not an accident
-# of import order:
-#
-#   1. _PRIORITY ranks every key. At import, keys with a banked green row
-#      in any CORRECTNESS_r*.json rotate to the back automatically
-#      (_driver_green reads the files dynamically), so the driver window is
-#      always the first 50 never-verified keys of this curated order — no
-#      manual bookkeeping when a round's results land.
-#   2. The order within the unchecked segment is risk-curated, not FIFO:
-#      each round the next window is kept stable while later tranches are
-#      reordered to front-load the keys likeliest to diverge on the driver
-#      host (complex composites, statistical tests with host-sensitive
-#      float paths) — VERDICT r6 ask #3. Reorders must keep the CURRENT
-#      window (first 50 unchecked) byte-identical, since the driver
-#      verifies it at round end from this very ordering.
-#   3. tests/test_registry_rotation.py + test_registry_order.py pin the
-#      invariants (exact coverage, no banked key in a window slot, window
-#      == first 50 unbanked of _PRIORITY, greens at the back).
-# ---------------------------------------------------------------------------
-
-_PRIORITY: tuple[str, ...] = (
-    # -- r8 driver window (unchecked slots 1-50), loaded by the r7
-    # reorder and VERIFIED against the union of all CORRECTNESS files:
-    # the full eval_* family incl. pipeline_eval_e2e, then the ten
-    # likeliest-to-diverge round-6 keys. VERDICT r7 ask #1 keeps this
-    # prefix byte-stable until the driver runs.
-    "eval_auc_roc",
-    "eval_calibration_ece",
-    "eval_pass_at_k",
-    "eval_ndcg_at_k",
-    "eval_bradley_terry",
-    "eval_mcnemar_paired",
-    "eval_classification_report",
-    "eval_cohens_kappa",
-    "eval_mrr_at_k",
-    "eval_brier_decomposition",
-    "pipeline_eval_e2e",
-    "eval_average_precision",
-    "eval_threshold_sweep",
-    "eval_lift_gains",
-    "eval_auc_delong_ci",
-    "graph_betweenness",
-    "graph_scc",
-    "attribution_shapley",
-    "stats_fisher_exact",
-    "ts_dtw_distance",
-    "ts_kalman_filter",
-    "ts_granger_causality",
-    "ts_hurst_exponent",
-    "text_burrows_delta",
-    "stats_cochran_armitage",
-    "text_bigram_logprob",
-    "text_ngram_novelty",
-    "ts_theilsen_slope",
-    "diff_metric_snapshots",
-    "emb_outlier_distance",
-    "join_asof_tolerance",
-    "path_trigram_topk",
-    "sketch_bloom_prefilter",
-    "assert_quality_report",
-    "graph_label_propagation",
-    "sample_coreset_kcenter",
-    "stats_ks_two_sample",
-    "layout_hilbert",
-    "stats_chi2_independence",
-    "split_group_holdout",
-    "ts_time_weighted_avg",
-    "join_dpp_pruned",
-    "agg_weighted_median",
-    "ts_downsample_m4",
-    "path_regex_match",
-    "sim_matryoshka_recall",
-    "dedup_incremental_delta",
-    "funnel_window_depth",
-    "source_corrupt_quarantine",
-    "ts_max_drawdown",
-    # -- r9 risk-ranked tranche (VERDICT r7 ask #3, loaded at r8 start
-    # without touching the window above): the remaining
-    # iterative/numeric/special-function keys promoted ahead of
-    # mechanical window/profile/join keys — recursions (Durbin-Levinson
-    # PACF, Katz/HITS power iterations, SPRT walk), special functions
-    # (Anderson-Darling erf polynomial, SAX gaussian breakpoints,
-    # chi2/F tails), rank-and-tie statistics, resampling determinism,
-    # and log-based text/embedding numerics.
-    "ts_sax_symbolic",
-    "stats_anderson_darling",
-    "graph_katz_centrality",
-    "sketch_ams_f2",
-    "ts_pacf_durbin",
-    "stats_ols_multi",
-    "window_rolling_regression",
-    "graph_hits",
-    "graph_modularity",
-    "stats_sprt_sequential",
-    "stats_bayesian_ab",
-    "analytics_survival_km",
-    "stats_ljung_box",
-    "stats_kruskal_wallis",
-    "stats_friedman_test",
-    "stats_dunn_posthoc",
-    "stats_wilcoxon_signed_rank",
-    "stats_holm_bonferroni",
-    "stats_runs_test",
-    "stats_levene",
-    "stats_spearman_corr",
-    "stats_cramers_v",
-    "stats_permutation_test",
-    "stats_bootstrap_ci",
-    "stats_jackknife_ratio",
-    "stats_delta_method_ratio",
-    "text_js_divergence",
-    "text_keyness_gtest",
-    "profile_benford_law",
-    "emb_intrinsic_dimension",
-    "emb_silhouette_simplified",
-    "ts_dominant_period",
-    "ts_strength_measures",
-    "ts_seasonal_anomaly",
-    "ts_retention_halflife",
-    "text_textrank_keywords",
-    "text_rake_keywords",
-    "mm_audio_vad",
-    "sim_ivf_nprobe_curve",
-    "sketch_theta_intersection",
-    "sketch_countmin_width_curve",
-    "emb_alignment_uniformity",
-    "emb_hubness",
-    "emb_triplet_accuracy",
-    "emb_centroid_drift",
-    "emb_random_projection",
-    "emb_separation_histogram",
-    "dedup_soft_weights",
-    "curation_rejection_sampling",
-    "sample_importance_systematic",
-    # -- r10 risk-ranked tranche (VERDICT r8 ask #5, loaded at r9
-    # start WITHOUT touching the 50-key window above, which ends at
-    # sample_importance_systematic): the trailing 55 reordered to
-    # front-load residual numeric/iterative/fold risk — the k-core
-    # peeling loop, percentile-interpolation and double-median
-    # numerics, sorted cumulative folds (Gini/Pareto), log/pow/sqrt
-    # special functions (Theil, negative-sampling 0.75 power,
-    # Adamic-Adar, lexical diversity, langid), ordering-sensitive
-    # sweepline + SPC rule folds, hash-determinism sampling keys, and
-    # the two composites — ahead of mechanical window/profile/sink/
-    # calendar keys.
-    "graph_kcore",
-    "stats_iqr_outliers",
-    "ts_anomaly_mad",
-    "agg_gini_revenue",
-    "agg_theil_inequality",
-    "text_negative_sampling_table",
-    "analytics_markov_transitions",
-    "sample_stratified_neyman",
-    "ts_spc_western_electric",
-    "text_word_burstiness",
-    "stats_cohens_d",
-    "graph_clustering_coefficient",
-    "graph_adamic_adar",
-    "text_lexical_diversity",
-    "text_langid_eval",
-    "ts_concurrency_sweepline",
-    "analytics_pareto_concentration",
-    "sample_seed_independence",
-    "split_kfold",
-    "text_feature_hashing",
-    "agg_approx_topk",
-    "dedup_cross_source_matrix",
-    "pipeline_feature_store_e2e",
-    "curation_gate_parity_audit",
-    "profile_functional_dependency",
-    "analytics_interpurchase_time",
-    "ts_alert_episodes",
-    # -- mechanical remainder (window/profile/join/sink/calendar
-    # keys, prior relative order) — drains r10/r11.
-    "subq_not_in_null_aware",
-    "window_cume_dist",
-    "graph_degree_distribution",
-    "analytics_market_basket",
-    "window_streak_longest",
-    "join_interval_overlap",
-    "cdc_deletion_vectors",
-    "profile_pk_candidate",
-    "window_keyset_pagination",
-    "text_ngram_coverage",
-    "ts_traffic_profile",
-    "sink_dynamic_partition_overwrite",
-    "fn_month_arithmetic",
-    "window_growth_accounting",
-    "analytics_power_user_curve",
-    "analytics_abc_xyz",
-    "layout_zone_map_pruning",
-    "profile_fk_orphan_report",
-    "profile_snapshot_recon",
-    "analytics_net_revenue_retention",
-    "curation_source_report",
-    "sink_merge_schema",
-    "analytics_segment_migration",
-    "graph_reciprocity",
-    "analytics_revenue_bridge",
-    "ts_year_over_year",
-    "analytics_basket_size_curve",
-    "fn_ip_cidr",
-    # -- r11 expansion tranche (45 keys), ranked strictly AFTER the
-    # five r11 tail keys so the rotation endgame's slots 1-5 are
-    # untouched: the r11 window becomes tail-5 + these, all covered
-    # by the driver's 50-slot check in one round.
-    "stats_ttest_paired",
-    "stats_sign_test",
-    "stats_kendall_tau",
-    "stats_mood_median",
-    "stats_hodges_lehmann",
-    "stats_grubbs_outlier",
-    "stats_theil_u",
-    "stats_durbin_watson",
-    "stats_breusch_pagan",
-    "stats_cooks_distance",
-    "stats_chow_test",
-    "stats_partial_corr",
-    "stats_g_test",
-    "stats_concordance_cindex",
-    "agg_hhi_concentration",
-    "agg_trimmed_mean",
-    "analytics_seasonality_index",
-    "analytics_price_elasticity",
-    "attribution_time_decay",
-    "ts_bollinger_bands",
-    "ts_rsi",
-    "ts_macd",
-    "ts_turning_points",
-    "ts_variance_ratio",
-    "text_heaps_law",
-    "text_frequency_spectrum",
-    "text_word_length_profile",
-    "text_positional_divergence",
-    "graph_closeness_centrality",
-    "graph_harmonic_centrality",
-    "graph_eccentricity",
-    "graph_rich_club",
-    "eval_matthews_corr",
-    "eval_log_loss",
-    "eval_win_rate_matrix",
-    "eval_length_bias",
-    "eval_fleiss_kappa",
-    "eval_krippendorff_alpha",
-    "eval_rbo_overlap",
-    "emb_mahalanobis_outlier",
-    "sketch_linear_counting",
-    "profile_value_pattern",
-    "profile_join_cardinality",
-    "profile_type_inference",
-    "split_time_based",
-    # -- banked driver-green keys, in the curated pre-r7 relative
-    # order (filtered to the back at import time by _ordered(); their
-    # rank here only matters if every unchecked key ever drains).
-    "sim_pq_adc_search",
-    "stats_proportion_ztest",
-    "stats_cuped_adjustment",
-    "ts_rolling_corr",
-    "stats_srm_check",
-    "profile_freshness_lag",
-    "sample_balanced_classes",
-    "ts_cross_correlation_lag",
-    "emb_cluster_purity",
-    "stats_power_analysis",
-    "ts_outage_gaps",
-    "text_cooccurrence_pmi",
-    "dedup_lsh_tuning_curve",
-    "pipeline_experiment_e2e",
-    "window_rolling_active_users",
-    "sample_hard_negatives",
-    "ts_holt_winters",
-    "fn_data_masking",
-    "sim_filtered_ann",
-    "ts_forecast_backtest",
-    "graph_assortativity",
-    "text_zipf_fit",
-    "text_entropy_char",
-    "profile_source_overlap",
-    "ts_peak_detection",
-    "sim_mips_transform",
-    "ts_week_over_week",
-    "stats_bh_correction",
-    "pipeline_observability_e2e",
-    "join_geo_grid",
-    "stats_anova_oneway",
-    "text_readability",
-    "curation_dedup_threshold_sweep",
-    "stats_tost_equivalence",
-    "window_cohort_ltv_curve",
-    "graph_bipartite_projection",
-    "window_bounce_rate",
-    "dedup_cluster_census",
-    "window_new_vs_returning",
-    "stats_sample_size_calc",
-    "stats_diff_in_diff",
-    "window_forward_retention",
-    "text_boilerplate_fraction",
-    "attribution_position_based",
-    "sketch_histogram_quantiles",
-    "emb_dim_variance",
-    "ts_autocorr",
-    "ts_seasonal_decompose",
-    "agg_winsorized_mean",
-    "graph_jaccard_neighbors",
-    "join_inner",
-    "join_left",
-    "join_right",
-    "join_full",
-    "join_cross",
-    "join_semi",
-    "join_anti",
-    "project_cols",
-    "project_star",
-    "filter_where",
-    "pred_compare",
-    "pred_between",
-    "pred_is_null",
-    "pred_in_subquery",
-    "pred_exists",
-    "expr_cast",
-    "expr_case",
-    "expr_arith",
-    "expr_bool_logic",
-    "scan_model",
-    "scan_external",
-    "scan_derived",
-    "scan_nested_join",
-    "subq_scalar",
-    "subq_exists",
-    "subq_in",
-    "subq_cte",
-    "subq_nested_query",
-    "sort_order_by",
-    "limit",
-    "topk",
-    "set_union",
-    "set_union_all",
-    "set_intersect",
-    "set_except",
-    "window_fns",
-    "fn_conditional",
-    "agg_collect_set",
-    "agg_approx_percentile",
-    "agg_approx_distinct",
-    "tpch_q1",
-    "tpch_q2",
-    "tpch_q3",
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q9",
-    "tpch_q10",
-    "tpch_q11",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q15",
-    "tpch_q16",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q20",
-    "tpch_q21",
-    "tpch_q22",
-    "expr_unary",
-    "expr_nested",
-    "expr_collate",
-    "expr_try_cast",
-    "pred_like",
-    "sink_view",
-    "sink_table",
-    "sort_nulls",
-    "set_except_all",
-    "subq_correlated",
-    "join_lateral",
-    "fn_array",
-    "fn_map",
-    "fn_json",
-    "fn_regexp",
-    "fn_hash",
-    "fn_bitwise",
-    "fn_array_ops",
-    "fn_sequence",
-    "fn_string_advanced",
-    "agg_bool",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh",
-    "dedup_connected_components",
-    "dedup_survivors",
-    "sim_topk_bruteforce",
-    "sim_topk_ivf",
-    "sim_topk_ivf_learned",
-    "sim_join_topk",
-    "pipeline_training_data",
-    "text_token_count",
-    "text_quality_score",
-    "text_lang_id",
-    "text_fingerprint",
-    "fn_url",
-    "fn_json_typed",
-    "fn_date_spine",
-    "fn_math_extended",
-    "text_chunk",
-    "text_token_count_bpe",
-    "grouped_zscore",
-    "split_train_val_test",
-    "mix_sources_weighted",
-    "mm_decode_meta",
-    "mm_frame_sample",
-    "mm_resize",
-    "mm_audio_features",
-    "window_tumbling",
-    "window_sliding",
-    "window_session",
-    "stream_dedup",
-    "window_range_frame",
-    "rollup_hypertable",
-    "stateful_user_totals",
-    "text_repetition_ratio",
-    "curation_contamination_check",
-    "mix_epochs_weighted",
-    "stream_interval_join",
-    "dedup_chunk_crosscorpus",
-    "pack_sequences",
-    "sample_stratified",
-    "emb_centroids",
-    "emb_norm_quantize",
-    "source_orc",
-    "text_idf",
-    "text_ngram_topk",
-    "assert_observe_metrics",
-    "sink_jsonl_sharded",
-    "source_schema_evolution",
-    "window_topk_per_window",
-    "sketch_countmin_bigrams",
-    "ts_gap_fill_locf",
-    "funnel_conversion",
-    "udf_pandas_score",
-    "text_pii_redact",
-    "text_unigram_logprob",
-    "curation_quality_buckets",
-    "sketch_hll_by_source",
-    "stream_static_enrich",
-    "agg_histogram",
-    "sample_weighted_reservoir",
-    "bpe_learn_merges",
-    "dedup_exact_substring",
-    "bpe_apply_tokenize",
-    "quality_classifier_score",
-    "layout_zorder",
-    "join_fuzzy_names",
-    "profile_key_skew",
-    "window_ntile",
-    "merge_upsert",
-    "fn_higher_order",
-    "agg_corr",
-    "ts_resample_ohlc",
-    "curation_domain_cap",
-    "curation_dsir_weights",
-    "text_normalize",
-    "dedup_semdedup",
-    "emb_pq_encode",
-    "sink_cow_update",
-    "layout_compaction_bins",
-    "agg_bitmap_distinct",
-    "window_nth_value",
-    "sim_range_search",
-    "scd2_intervals",
-    "fn_variant",
-    "stream_upsert_sink",
-    "graph_pagerank",
-    "window_gap_islands",
-    "text_gopher_rules",
-    "curation_token_budget",
-    "window_session_dynamic",
-    "attribution_last_touch",
-    "sample_poisson_bootstrap",
-    "scd2_incremental",
-    "fn_collation_lcase",
-    "cohort_retention",
-    "curation_mix_temperature",
-    "join_asof_forward",
-    "window_trailing_events",
-    "agg_moments",
-    "pred_rlike",
-    "window_range_numeric",
-    "agg_geomean",
-    "pack_collate_pad",
-    "scan_values",
-    "sink_append",
-    "agg_group_by_all",
-    "fn_try_arith",
-    "pred_in_multicol",
-    "abtest_zscore",
-    "funnel_time_to_convert",
-    "fn_format_string",
-    "dedup_consecutive",
-    "agg_weighted_avg",
-    "window_share_of_total",
-    "pred_like_escape",
-    "set_union_by_name",
-    "agg_min_max_by",
-    "agg_pivot_multi",
-    "dedup_url_canonical",
-    "ts_lttb_downsample",
-    "window_rolling_median",
-    "window_rolling_distinct",
-    "ts_ewma",
-    "ts_interpolate_linear",
-    "agg_entropy",
-    "sim_maxsim_multivector",
-    "dedup_containment",
-    "text_tfidf_topk",
-    "ts_anomaly_zscore",
-    "join_asof_nearest",
-    "graph_triangle_count",
-    "mm_phash_dedup",
-    "sim_rerank_mmr",
-    "profile_table_summary",
-    "incr_agg_maintenance",
-    "join_temporal_scd2",
-    "ts_holt_linear",
-    "emb_whitening",
-    "ts_changepoint_cusum",
-    "pipeline_curation_e2e",
-    "dedup_funnel_report",
-    "sketch_kmv_distinct",
-    "dedup_minhash_estimate",
-    "stats_welch_ttest",
-    "ts_derivative",
-    "stats_mann_whitney",
-    "analytics_rfm_segments",
-    "profile_psi_drift",
-    "window_decay_popularity",
-    "cdc_apply_changelog",
-    "text_bm25_topk",
-    "sim_hybrid_rrf",
-    "emb_knn_graph",
-    "pipeline_rag_e2e",
-    "graph_bfs_hops",
-    "ts_mann_kendall",
-    "emb_binary_quantize",
-    "stream_late_audit",
-    "text_trigram_backoff",
-    "mm_shard_manifest",
-    "fn_timezone",
-    "sink_stats_manifest",
-    "agg_group_by",
-    "agg_sum",
-    "agg_count_star",
-    "agg_count",
-    "agg_min",
-    "agg_max",
-    "agg_avg",
-    "agg_listagg",
-    "agg_distinct",
-    "agg_having",
-    "window_lag_lead",
-    "window_rank",
-    "window_running",
-    "window_qualify",
-    "agg_stats",
-    "sample_deterministic",
-    "explode_tokens",
-    "unpivot",
-    "join_skew_salted",
-    "join_range",
-    "agg_mode",
-    "window_first_last",
-    "pred_null_safe_eq",
-    "agg_filter",
-    "window_percent_rank",
-    "incr_new_rows",
-    "assert_not_exists",
-    "assert_scalar_compare",
-    "assert_typecheck",
-    "source_csv",
-    "source_json",
-    "sink_partitioned",
-    "sink_bucketed",
-    "sink_sorted",
-    "agg_grouping_sets",
-    "agg_rollup",
-    "agg_cube",
-    "agg_pivot",
-    "agg_percentile",
-    "join_asof",
-    "fn_datetime_arith",
-    "fn_struct",
-    "skyline_pareto",
-    "limit_offset",
-    "fn_extract_date",
-    "fn_string",
-    "fn_math",
-    # -- r12 expansion tranche (34 keys): ranked after every banked
-    # key per the README r12 plan, so the whole tranche fills the
-    # r12 driver window and is verified the round it lands. Order
-    # matches tests/test_registry_rotation._ENDGAME_ORDER.
-    "stats_jarque_bera",
-    "stats_bartlett_test",
-    "stats_brown_forsythe",
-    "stats_f_test_variance",
-    "stats_wilson_ci",
-    "stats_cohens_h",
-    "stats_cliffs_delta",
-    "stats_kr20_reliability",
-    "stats_by_correction",
-    "ts_dickey_fuller",
-    "ts_stochastic_oscillator",
-    "ts_atr",
-    "ts_donchian_channels",
-    "ts_ulcer_index",
-    "ts_garman_klass",
-    "ts_obv",
-    "ts_aroon",
-    "ts_permutation_entropy",
-    "ts_cci",
-    "graph_wiener_index",
-    "graph_transitivity_global",
-    "graph_local_bridges",
-    "graph_link_prediction",
-    "eval_precision_recall_at_k",
-    "eval_spiegelhalter_z",
-    "eval_hosmer_lemeshow",
-    "eval_gwets_ac1",
-    "eval_weighted_kappa",
-    "emb_anisotropy",
-    "emb_cka_halves",
-    "text_simpson_diversity",
-    "text_entropy_rate_bigram",
-    "profile_mutual_information",
-    "join_fuzzy_levenshtein",
-    # -- r12 second wave (6 keys): same pre-clear bar, ranked after
-    # the first wave so the whole round stays one 40-key window.
-    "ts_cointegration_eg",
-    "ts_spectral_entropy",
-    "stats_icc_oneway",
-    "stats_page_trend",
-    "eval_kendalls_w",
-    "graph_small_world",
-    # -- r12 third wave (5 keys): same pre-clear bar; the round's
-    # tranche closes at 45 keys, inside the 50-slot window budget.
-    "emb_participation_ratio",
-    "text_msttr",
-    "stats_mood_scale_test",
-    "stats_ks_uniform",
-    "ts_amihud_illiquidity",
-    # -- r13 expansion tranche: every r12 key is banked by
-    # CORRECTNESS_r12, so these fill the r13 driver window from
-    # slot 1, in registration order (matches
-    # tests/test_registry_rotation._ENDGAME_ORDER).
-    "stats_huber_irls",
-    "stats_cucconi_test",
-    "stats_jonckheere_terpstra",
-    "stats_siegel_slopes",
-    "stats_cox_stuart",
-    "stats_rank_biserial",
-    "stats_somers_d",
-    "stats_gk_gamma",
-    "stats_odds_ratio",
-    "stats_risk_ratio",
-    "stats_poisson_two_rate",
-    "stats_capture_recapture",
-    "stats_hedges_g",
-    "stats_uncertainty_coeff",
-    "ts_changepoint_binseg",
-    "ts_parkinson_volatility",
-    "ts_rogers_satchell",
-    "ts_yang_zhang",
-    "ts_kaufman_er",
-    "ts_vwap_daily",
-    "ts_sample_entropy",
-    "ts_higuchi_fd",
-    "text_chao1_richness",
-    "text_pielou_evenness",
-    "text_bray_curtis_sources",
-    "analytics_prefixspan",
-    "dedup_rnn_mutual",
-    "graph_degree_gini",
-    "eval_youden_j",
-    "eval_brier_skill",
-    "stats_cochran_q",
-    "stats_quade_test",
-    "eval_expected_cost",
-    "text_gunning_fog",
-    # -- r13 second wave (16 keys): same five-way pre-clear bar,
-    # ranked after the first wave so the whole round stays one
-    # 50-key window (matches tests/test_registry_rotation
-    # ._ENDGAME_ORDER).
-    "stats_median_test",
-    "stats_bowker_symmetry",
-    "stats_cronbach_alpha",
-    "stats_kuiper_uniform",
-    "stats_welch_anova",
-    "stats_dixon_q",
-    "ts_keltner_channels",
-    "ts_chaikin_money_flow",
-    "ts_mass_index",
-    "ts_trix",
-    "ts_choppiness_index",
-    "ts_ultimate_oscillator",
-    "ts_market_beta",
-    "text_yule_k",
-    "text_coleman_liau",
-    "graph_avg_neighbor_degree",
-)
-
-def _driver_green(root: str | None = None) -> frozenset[str]:
-    """Keys with a banked driver-green row in ANY CORRECTNESS_r*.json.
-
-    Read dynamically so the window self-rotates: when the driver drops
-    a new round's file into the repo, every key it verified moves to
-    the back of the registration order on the next import, and the
-    50-slot window advances to the next tranche of `_PRIORITY` with no
-    manual bookkeeping. Green = the full hash check passed, or a
-    rows-only key (no oracle twin registered) completed its weaker
-    check cleanly. Falls back to the hardcoded round-1 set when no
-    files are readable (e.g. a bare checkout)."""
-    import glob
-    import json
-    import os
-
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    green: set[str] = set()
-    seen_file = False
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            rows = json.load(open(path))
-        except (OSError, ValueError):
-            continue
-        seen_file = True
-        for key, r in rows.items():
-            if not isinstance(r, dict) or r.get("err"):
-                continue
-            full = r.get("hash_match") and r.get("schema_match")
-            # ADVICE r6: require an affirmative rows_match=True — a
-            # malformed / partially-written row (rows_match absent) must
-            # not bank an unverified key.
-            rows_only = (
-                key in _REGISTRY
-                and _REGISTRY[key].oracle is None
-                and r.get("rows_match") is True
-            )
-            if full or rows_only:
-                green.add(key)
-    return frozenset(green) if seen_file else _DRIVER_GREEN_R01
-
-
-# Fully green rows in CORRECTNESS_r01.json (rows+schema+hash all true).
-_DRIVER_GREEN_R01: frozenset[str] = frozenset(
-    {
-        "agg_group_by",
-        "agg_sum",
-        "agg_count_star",
-        "agg_count",
-        "agg_min",
-        "agg_max",
-        "agg_avg",
-        "agg_listagg",
-        "agg_distinct",
-        "agg_having",
-        "window_lag_lead",
-        "window_rank",
-        "window_running",
-        "window_qualify",
-        "agg_stats",
-        "sample_deterministic",
-        "explode_tokens",
-        "unpivot",
-        "join_skew_salted",
-        "join_range",
-        "agg_mode",
-        "window_first_last",
-        "pred_null_safe_eq",
-        "agg_filter",
-        "window_percent_rank",
-        "incr_new_rows",
-        "assert_not_exists",
-        "assert_scalar_compare",
-        "assert_typecheck",
-        "source_csv",
-        "source_json",
-        "sink_partitioned",
-        "sink_bucketed",
-        "sink_sorted",
-        "agg_grouping_sets",
-        "agg_rollup",
-        "agg_cube",
-        "agg_pivot",
-        "agg_percentile",
-        "join_asof",
-        "fn_datetime_arith",
-        "fn_struct",
-        "skyline_pareto",
-        "limit_offset",
-        "fn_extract_date",
-        "fn_string",
-        "fn_math",
-    }
-)
-
-
-def _ordered(registry: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    """Manifest order: never-driver-verified keys first (in curated
-    `_PRIORITY` order, unlisted stragglers after as a fail-safe), then
-    banked-green keys — re-running a green key buys nothing while any
-    key still lacks a driver row."""
-    banked = _driver_green()
-    pri = [k for k in _PRIORITY if k in registry and k not in banked]
-    rest = [
-        k for k in registry if k not in _PRIORITY and k not in banked
-    ]
-    green = [k for k in registry if k in banked]
-    return {k: registry[k] for k in (*pri, *rest, *green)}
-
 
 def query(key: str, oracle: str | None = None, tables: tuple[str, ...] = TABLES):
     """Decorator registering a parity query under ``key``.
@@ -875,7 +47,7 @@ def query(key: str, oracle: str | None = None, tables: tuple[str, ...] = TABLES)
     def deco(fn: QueryFn) -> QueryFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Drop intermediates persisted by the PREVIOUS query (its
-            # result is materialized by now) so 252-key sweeps don't
+            # result is materialized by now) so full-registry sweeps don't
             # accumulate cached blocks for the life of the session.
             release_persisted(spark)
             load_tables(spark, sf_dir, tables)
@@ -900,8 +72,11 @@ def _ensure_loaded() -> None:
 
 
 def all_specs() -> dict[str, QuerySpec]:
+    """Every spec in registration order, which is the order the driver
+    verifies ``queries()`` in (pinned by tests/test_registry_contract.py).
+    A copy, so callers cannot mutate the registry."""
     _ensure_loaded()
-    return _ordered(_REGISTRY)
+    return dict(_REGISTRY)
 
 
 def spark_queries() -> dict[str, QueryFn]:

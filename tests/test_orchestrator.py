@@ -126,6 +126,36 @@ def test_refs_dotted_and_quoted():
     assert refs == ["sch.tab", "Weird Name"]
 
 
+def test_backtick_identifiers():
+    """Models run as Spark SQL, whose native identifier quote is the
+    backtick: a quoted name is a ref, and a ';' inside it splits nothing."""
+    assert extract_refs("SELECT * FROM `stg` JOIN b USING (k)") == ["stg", "b"]
+    assert extract_refs("SELECT 1 FROM `a``b`.`c d`") == ["a`b.c d"]
+    assert split_statements("CREATE VIEW `x;y` AS SELECT 1") == [
+        "CREATE VIEW `x;y` AS SELECT 1"
+    ]
+    assert parse_model_statement("CREATE VIEW `x;y` AS SELECT 1").name == "x;y"
+
+
+def test_backtick_ref_orders_the_run(spark, tmp_path):
+    """A backtick-quoted ref is a DAG edge: `consumer` sorts first by
+    file name but must run after the `base` it reads."""
+    from powersql_spark.orchestrator.runner import run
+
+    (tmp_path / "powersql.toml").write_text(
+        '[project]\nname = "bt"\nmodels = ["models"]\n'
+    )
+    (tmp_path / "models").mkdir()
+    (tmp_path / "models" / "a_consumer.sql").write_text(
+        "CREATE TABLE consumer AS SELECT n*10 AS m FROM `base`"
+    )
+    (tmp_path / "models" / "b_base.sql").write_text(
+        "CREATE TABLE base AS SELECT 1 AS n"
+    )
+    assert run(spark, tmp_path, sources=SOURCES) == ["base", "consumer"]
+    assert spark.table("consumer").collect()[0]["m"] == 10
+
+
 # ---------- DAG (reference src/main.rs:489-548) ----------
 
 

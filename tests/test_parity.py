@@ -3,7 +3,7 @@
 For every registered query with an oracle: run the Spark callable and
 the DuckDB SQL at the test scale factor and compare row count, sorted
 column names, and values (order-insensitive, float-tolerant). Stricter
-failures here mean hash mismatches in the driver's CORRECTNESS_r{N}.json.
+failures here mean hash mismatches in the driver's correctness report.
 """
 
 from __future__ import annotations
@@ -52,6 +52,15 @@ def _normalize(rows, cols):
 def test_oracle_parity(spark, sf_dir, key):
     spec = SPECS[key]
     sdf = spec.fn(spark, sf_dir)
+    # The driver's pandas canonicalizer hashes every output cell, and
+    # array/map/struct cells crash it ('unhashable type: list'): keys
+    # emit scalar forms (sorted array_join strings, flat struct fields).
+    complex_cols = [
+        f"{f.name}:{f.dataType.simpleString()}"
+        for f in sdf.schema.fields
+        if f.dataType.simpleString().startswith(("array", "map", "struct"))
+    ]
+    assert not complex_cols, f"{key}: complex-typed output columns {complex_cols}"
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
 
