@@ -18,7 +18,9 @@ DuckDB oracle reads the same intermediate file.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,14 +33,17 @@ from powersql_spark.registry import query
 # files (a fixed shared path let one session read another's half-written
 # overwrite). The oracle SQL strings embed this path at import time, and
 # the driver runs the Spark query and its DuckDB oracle in the SAME
-# process, so parity holds per session.
+# process, so parity holds per session. The directory exists only once
+# a key writes into it, and is removed when the process exits.
 _STAGE = os.path.join(
     tempfile.gettempdir(), f"powersql_connectors_{os.getpid()}"
 )
 
 
 def _stage_path(name: str) -> str:
-    os.makedirs(_STAGE, exist_ok=True)
+    if not os.path.isdir(_STAGE):
+        os.makedirs(_STAGE, exist_ok=True)
+        atexit.register(shutil.rmtree, _STAGE, ignore_errors=True)
     return os.path.join(_STAGE, name)
 
 
@@ -46,7 +51,7 @@ def _stage_path(name: str) -> str:
     "source_csv",
     oracle=f"""
     SELECT n_nationkey, n_name, n_regionkey
-    FROM read_csv('{_stage_path("nation.csv")}', header = true,
+    FROM read_csv('{_STAGE}/nation.csv', header = true,
                   columns = {{'n_nationkey': 'BIGINT', 'n_name': 'VARCHAR',
                               'n_regionkey': 'BIGINT'}})
     ORDER BY n_nationkey
@@ -70,7 +75,7 @@ def source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "source_json",
     oracle=f"""
     SELECT r_regionkey, r_name
-    FROM read_json('{_stage_path("region.jsonl")}',
+    FROM read_json('{_STAGE}/region.jsonl',
                    columns = {{'r_regionkey': 'BIGINT', 'r_name': 'VARCHAR'}},
                    format = 'newline_delimited')
     ORDER BY r_regionkey
@@ -141,7 +146,6 @@ def sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DROP alone isn't enough: managed-table *locations* outlive the
     # session-scoped in-memory catalog, and a fresh session refuses to
     # create a managed table over a leftover directory.
-    import shutil
     from urllib.parse import urlparse
 
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
@@ -367,8 +371,6 @@ def sink_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     size; pair it with partitionBy so readers prune to fresh
     partitions (sink_partitioned) and with compaction for small-file
     debt (layout_compaction_bins)."""
-    import shutil
-
     path = _stage_path("nation_append")
     shutil.rmtree(path, ignore_errors=True)
     n = spark.table("nation")
@@ -673,8 +675,6 @@ def sink_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     time — acceptable for occasional evolution; production tables
     record the unified schema in a catalog/manifest instead
     (sink_stats_manifest) so the planner never re-infers."""
-    import shutil
-
     path = _stage_path("orders_merge_schema")
     shutil.rmtree(path, ignore_errors=True)
     o = spark.table("orders")

@@ -1,8 +1,8 @@
 """PowerSQL-parity orchestration tool on Spark.
 
 Pipeline (mirrors reference src/main.rs:319-345): load powersql.toml ->
-discover *.sql models/tests -> parse -> extract refs -> build DAG ->
-detect cycles -> then per command:
+discover *.sql models/tests -> parse -> extract refs with the session's
+Catalyst parser -> build DAG -> detect cycles -> then per command:
 
 - ``check``: type every model without executing (Spark lazy analysis
   replaces the reference's TableType checker, src/types.rs:47-221).
@@ -23,6 +23,7 @@ from powersql_spark.orchestrator.sqlparse import (
     extract_refs,
     parse_model_file,
     parse_test_file,
+    sql_parser,
 )
 
 __all__ = [
@@ -36,4 +37,5 @@ __all__ = [
     "extract_refs",
     "parse_model_file",
     "parse_test_file",
+    "sql_parser",
 ]

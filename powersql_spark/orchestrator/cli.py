@@ -56,15 +56,12 @@ def main(argv: list[str] | None = None) -> int:
 
 
 def _dispatch(args: argparse.Namespace, runner) -> int:
-
-    if args.command == "docs":
-        path = runner.docs(args.project)
-        print(f"wrote {path}")
-        return 0
-
     from powersql_spark.session import build_session
 
     spark = build_session(app_name=f"powersql-{args.command}")
+    if args.command == "docs":
+        print(f"wrote {runner.docs(spark, args.project)}")
+        return 0
     if args.command == "check":
         schemas = runner.check(
             spark, args.project, args.sources, args.sources_schema

@@ -4,8 +4,9 @@ Mirrors the reference's graph layer (src/main.rs:203-287): model ->
 referenced models (external sources filtered out, src/main.rs:221),
 cycle/missing-model detection (src/main.rs:229-254), and Kahn-style
 scheduling nodes (ModelNode { live_parents, next_nodes },
-src/main.rs:256-287). Pure Python — the inter-model DAG is orchestration
-state, not a Spark concern (Spark's own DAG is per-query).
+src/main.rs:256-287). The refs come from the session's parser; the rest
+is pure Python — the inter-model DAG is orchestration state, not a Spark
+concern (Spark's own DAG is per-query).
 """
 
 from __future__ import annotations
@@ -13,16 +14,27 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from graphlib import CycleError, TopologicalSorter
 
-from powersql_spark.orchestrator.sqlparse import Model, extract_refs
+from pyspark.errors import ParseException
+from pyspark.sql import SparkSession
+
+from powersql_spark.orchestrator.sqlparse import Model, extract_refs, sql_parser
 
 
-def get_dependencies(models: dict[str, Model]) -> dict[str, list[str]]:
+def get_dependencies(
+    spark: SparkSession, models: dict[str, Model]
+) -> dict[str, list[str]]:
     """Per model, the models it reads. Refs that aren't models are
-    external source tables and are dropped (src/main.rs:213-227)."""
-    return {
-        name: [r for r in extract_refs(m.query) if r in models and r != name]
-        for name, m in models.items()
-    }
+    external source tables and are dropped (src/main.rs:213-227).
+    A model Spark cannot parse is a ValueError naming it."""
+    parser = sql_parser(spark)
+    deps: dict[str, list[str]] = {}
+    for name, m in models.items():
+        try:
+            refs = extract_refs(parser, m.query)
+        except ParseException as e:
+            raise ValueError(f"Model {name} does not parse: {str(e).strip()}") from e
+        deps[name] = [r for r in refs if r in models and r != name]
+    return deps
 
 
 def detect_cycles(deps: dict[str, list[str]]) -> None:

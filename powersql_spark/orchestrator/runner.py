@@ -46,14 +46,14 @@ class Project:
         return topo_order(self.deps)
 
 
-def load_project(project_dir: str | Path) -> Project:
+def load_project(spark: SparkSession, project_dir: str | Path) -> Project:
     """Shared prefix of every command (src/main.rs:319-345): config ->
-    discover -> parse -> deps -> cycle check."""
+    discover -> parse -> deps (from the session's parser) -> cycle check."""
     config = load_config(project_dir)
     models: dict[str, Model] = {}
     for path in config.model_files():
         models.update(parse_model_file(path.read_text()))
-    deps = get_dependencies(models)
+    deps = get_dependencies(spark, models)
     detect_cycles(deps)
     tests: list[Test] = []
     for path in config.test_files():
@@ -122,7 +122,7 @@ def check(
     Returns {model: schema DDL}. Strictly stronger than the reference's
     gradual Any-typing (SURVEY.md §1.2); with a schema manifest it is
     also data-free like the reference's."""
-    project = load_project(project_dir)
+    project = load_project(spark, project_dir)
     _register_analysis_env(spark, sources, sources_schema, project)
     ex = SparkExecutor(spark, Path(project_dir) / "target")
     schemas: dict[str, str] = {}
@@ -235,7 +235,7 @@ def run(
     (dbt's ``state:modified+`` — at 100 TB you rebuild the subgraph an
     edit invalidated, not the whole project). Every run merges the
     executed models' hashes back into ``target/manifest.json``."""
-    project = load_project(project_dir)
+    project = load_project(spark, project_dir)
     _register_sources(spark, sources, project)
     ex = SparkExecutor(spark, Path(project_dir) / "target")
     order = project.order
@@ -325,7 +325,7 @@ def test(
 ) -> int:
     """Run ASSERT data tests; returns the exit code (0 ok, 1 failures),
     printing OK/ERROR per test (src/main.rs:430-454)."""
-    project = load_project(project_dir)
+    project = load_project(spark, project_dir)
     _register_sources(spark, sources, project)
     ex = SparkExecutor(spark, Path(project_dir) / "target")
     _restore_models(project, ex)
@@ -353,7 +353,7 @@ def explain(
     what the reference cannot offer at all (its EXPLAIN would be the
     remote warehouse's). Models are analyzed in topo order so
     downstream plans resolve against upstream views."""
-    project = load_project(project_dir)
+    project = load_project(spark, project_dir)
     _register_analysis_env(spark, sources, sources_schema, project)
     ex = SparkExecutor(spark, Path(project_dir) / "target")
     order = project.order
@@ -370,11 +370,11 @@ def explain(
     return plans
 
 
-def docs(project_dir: str | Path) -> Path:
+def docs(spark: SparkSession, project_dir: str | Path) -> Path:
     """Emit docs/docs.md: one heading per model + the dependency arrows
     the reference computes but never writes (src/main.rs:416-429) as a
     mermaid graph — the documented improvement from SURVEY.md §2.A."""
-    project = load_project(project_dir)
+    project = load_project(spark, project_dir)
     out_dir = Path(project_dir) / "docs"
     out_dir.mkdir(parents=True, exist_ok=True)
     lines = [f"# {project.config.name}", ""]

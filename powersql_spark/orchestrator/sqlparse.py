@@ -1,16 +1,17 @@
-"""Minimal SQL parsing for orchestration: statement splitting, model /
+"""SQL handling for orchestration: statement splitting, model /
 ASSERT-test classification, and table-reference extraction.
 
-The reference gets a full AST from sqlparser-rs and walks it
-(src/main.rs:53-142); no public Python SQL parser ships in this
-environment (sqlglot absent), so this is the hand-rolled extractor
-decided in SURVEY.md §7 (1). Recall is a superset of the reference's:
-the token scan sees FROM/JOIN targets in *every* clause including WHERE
-and HAVING subqueries, which the reference's projection+FROM-only walk
-misses (src/main.rs:78-88). Spark re-parses every statement natively at
-execution time, so this layer only needs names, not full syntax.
+The reference walks the AST that sqlparser-rs gives it
+(src/main.rs:53-142). Models here execute as Spark SQL, so their refs
+come from Spark's own parser: ``extract_refs`` walks the unresolved
+logical plan that the session's Catalyst parser returns, fetched in one
+py4j call as JSON. That plan already holds CTE bodies and subquery
+expressions in every clause, so the refs are exactly the relations Spark
+will look up when the model runs, under the session's grammar (``"x"``
+is a string unless ``spark.sql.ansi.doubleQuotedIdentifiers`` is set).
 
-Only the reference's accepted statement forms are accepted
+Statement splitting and classification stay here, since ASSERT is not
+Spark SQL. They accept only the reference's statement forms
 (src/main.rs:152-160, 167-190):
 - CREATE [OR REPLACE] [MATERIALIZED] VIEW name AS <query>
 - CREATE TABLE name AS <query>
@@ -19,67 +20,36 @@ Only the reference's accepted statement forms are accepted
 
 from __future__ import annotations
 
+import json
 import re
 from dataclasses import dataclass
 
+# What splitting must see through, lexed as Spark does: line comments,
+# the start of a (nestable) bracketed comment, '...' and "..." literals
+# with backslash escapes, and backtick identifiers.
 _TOKEN_RE = re.compile(
-    r"""
-      (?P<comment>--[^\n]*|/\*.*?\*/)
-    | (?P<string>'(?:[^']|'')*')
-    | (?P<qident>"(?:[^"]|"")*"|`(?:[^`]|``)*`)
-    | (?P<word>[A-Za-z_][A-Za-z0-9_$]*)
-    | (?P<number>\d+(?:\.\d*)?|\.\d+)
-    | (?P<punct>[^\sA-Za-z0-9_$])
-    """,
-    re.VERBOSE | re.DOTALL,
+    r"""--[^\n]*|/\*|'(?:[^'\\]|\\.|'')*'|"(?:[^"\\]|\\.|"")*"|`(?:[^`]|``)*`|;""",
+    re.DOTALL,
 )
-
-# Functions whose argument lists legally contain a FROM/FOR keyword —
-# the reference gives EXTRACT a dedicated AST arm (src/main.rs:116).
-_FROM_IN_ARGS = {"extract", "substring", "trim", "position", "overlay"}
-
-_NON_TABLE_KEYWORDS = {
-    "select",
-    "lateral",
-    "unnest",
-    "values",
-    "where",
-    "group",
-    "order",
-    "having",
-    "limit",
-    "offset",
-    "union",
-    "intersect",
-    "except",
-    "on",
-    "using",
-    "inner",
-    "left",
-    "right",
-    "full",
-    "cross",
-    "natural",
-    "outer",
-    "join",
-    "as",
-}
+_BRACKET_RE = re.compile(r"/\*|\*/")
 
 
-@dataclass(frozen=True)
-class Token:
-    kind: str
-    text: str
-
-
-def tokenize(sql: str) -> list[Token]:
-    out: list[Token] = []
-    for m in _TOKEN_RE.finditer(sql):
-        kind = m.lastgroup or "punct"
-        if kind == "comment":
+def _lex(sql: str):
+    """(start, end) of each comment and each ';' outside literals and
+    comments. Bracketed comments nest, as in Spark's lexer."""
+    pos = 0
+    while m := _TOKEN_RE.search(sql, pos):
+        start, pos = m.span()
+        if m.group() == "/*":
+            depth = 1
+            while depth and (b := _BRACKET_RE.search(sql, pos)):
+                depth += 1 if b.group() == "/*" else -1
+                pos = b.end()
+            if depth:
+                pos = len(sql)
+        elif m.group()[0] not in "-;":
             continue
-        out.append(Token(kind, m.group()))
-    return out
+        yield start, pos
 
 
 def split_statements(sql: str) -> list[str]:
@@ -87,13 +57,12 @@ def split_statements(sql: str) -> list[str]:
     (slices of the input, so operators/spacing survive verbatim)."""
     stmts: list[str] = []
     start = 0
-    for m in _TOKEN_RE.finditer(sql):
-        if m.lastgroup == "punct" and m.group() == ";":
-            text = sql[start : m.start()].strip()
-            text = _strip_comments(text)
+    for s, e in _lex(sql):
+        if sql[s] == ";":
+            text = _strip_comments(sql[start:s].strip())
             if text:
                 stmts.append(text)
-            start = m.end()
+            start = e
     text = _strip_comments(sql[start:].strip())
     if text:
         stmts.append(text)
@@ -104,11 +73,11 @@ def _strip_comments(sql: str) -> str:
     """Remove SQL comments, preserving all other spacing verbatim."""
     res = []
     last = 0
-    for m in _TOKEN_RE.finditer(sql):
-        if m.lastgroup == "comment":
-            res.append(sql[last : m.start()])
+    for s, e in _lex(sql):
+        if sql[s] != ";":
+            res.append(sql[last:s])
             res.append(" ")
-            last = m.end()
+            last = e
     res.append(sql[last:])
     return "".join(res).strip()
 
@@ -131,10 +100,6 @@ def _unquote(name: str) -> str:
     """Strip ANSI "..." or Spark `...` identifier quotes, undoubling."""
     q = name[0]
     return name[1:-1].replace(q + q, q)
-
-
-def _ident_text(tok: Token) -> str:
-    return _unquote(tok.text) if tok.kind == "qident" else tok.text
 
 
 _MODEL_RE = re.compile(
@@ -174,7 +139,7 @@ def parse_model_file(sql: str) -> dict[str, Model]:
 
 
 _ASSERT_RE = re.compile(
-    r"^\s*ASSERT\s+(?P<cond>.*)\s+AS\s+(?P<msg>'(?:[^']|'')*')\s*$",
+    r"^\s*ASSERT\s+(?P<cond>.*)\s+AS\s+(?P<msg>'(?:[^'\\]|\\.|'')*')\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 
@@ -184,7 +149,7 @@ def parse_test_statement(stmt: str) -> Test:
     if not m:
         # Mirrors src/main.rs:188 ("Only assert supported").
         raise ValueError("Only assert supported: " + stmt[:80])
-    msg = m.group("msg")[1:-1].replace("''", "'")
+    msg = re.sub(r"\\(.)|''", lambda e: e.group(1) or "'", m.group("msg")[1:-1])
     return Test(condition=m.group("cond").strip(), message=msg)
 
 
@@ -192,135 +157,52 @@ def parse_test_file(sql: str) -> list[Test]:
     return [parse_test_statement(s) for s in split_statements(sql)]
 
 
-def _cte_names(tokens: list[Token]) -> set[str]:
-    """Names bound by WITH ... AS ( ... ) [, ...] at any nesting level."""
-    names: set[str] = set()
-    i = 0
-    n = len(tokens)
-    while i < n:
-        t = tokens[i]
-        if t.kind == "word" and t.text.lower() == "with":
-            j = i + 1
-            if j < n and tokens[j].kind == "word" and tokens[j].text.lower() == "recursive":
-                j += 1
-            # CTE list: name [(cols)] AS ( body ) [, name ...]
-            while j < n:
-                if tokens[j].kind not in ("word", "qident"):
-                    break
-                name = _ident_text(tokens[j])
-                j += 1
-                # optional column list
-                if j < n and tokens[j].text == "(":
-                    depth = 1
-                    j += 1
-                    while j < n and depth:
-                        depth += tokens[j].text == "("
-                        depth -= tokens[j].text == ")"
-                        j += 1
-                if not (
-                    j < n
-                    and tokens[j].kind == "word"
-                    and tokens[j].text.lower() == "as"
-                ):
-                    break
-                j += 1
-                if not (j < n and tokens[j].text == "("):
-                    break
-                names.add(name.lower())
-                depth = 1
-                j += 1
-                while j < n and depth:
-                    depth += tokens[j].text == "("
-                    depth -= tokens[j].text == ")"
-                    j += 1
-                if j < n and tokens[j].text == ",":
-                    j += 1
-                    continue
-                break
-            i = j
-        else:
-            i += 1
-    return names
+def sql_parser(spark):
+    """The session's Catalyst parser (a py4j handle): fetch it once and
+    pass it to every ``extract_refs`` call from the same thread.
+
+    The parser reads its conf from the calling JVM thread's active
+    session, which a fresh Python thread does not have: set it here."""
+    spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
+    return spark._jsparkSession.sessionState().sqlParser()
 
 
-def extract_refs(query: str) -> list[str]:
-    """Table names this query reads (reference get_refs, src/main.rs:53-142).
+def extract_refs(parser, query: str) -> list[str]:
+    """Table names this query reads (reference get_refs, src/main.rs:53-142),
+    in plan order, first spelling kept, minus names bound by WITH.
 
-    Token scan: every identifier in table position after FROM or JOIN,
-    at any nesting depth (subqueries in any clause included), minus
-    names bound by WITH. EXTRACT(x FROM y)-style function keywords are
-    excluded via a paren-context stack.
+    Collects every ``UnresolvedRelation`` (a dotted name; the plan's JSON
+    joins its parts with ", ", so a quoted part containing ", " reads as
+    two parts) and every ``IDENTIFIER('literal')``. Raises Spark's
+    ``ParseException`` on a query the session cannot parse.
     """
-    tokens = tokenize(query)
-    ctes = _cte_names(tokens)
     refs: list[str] = []
-    seen: set[str] = set()
+    ctes: set[str] = set()
 
-    paren_ctx: list[str] = []  # lowercased token preceding each open paren
-    prev: Token | None = None
-    i = 0
-    n = len(tokens)
+    def walk(node) -> None:
+        if isinstance(node, list):
+            for child in node:
+                walk(child)
+            return
+        if not isinstance(node, dict):
+            return
+        cls = node.get("class", "").rsplit(".", 1)[-1]
+        if cls == "UnresolvedRelation":
+            refs.append(node["multipartIdentifier"][1:-1].replace(", ", "."))
+        elif cls == "PlanWithUnresolvedIdentifier":
+            expr = node["identifierExpr"]
+            if len(expr) == 1 and expr[0].get("dataType") == "string":
+                refs.append(expr[0]["value"])
+        elif cls == "UnresolvedWith":
+            ctes.update(rel["_1"].lower() for rel in node["cteRelations"])
+        for value in node.values():
+            walk(value)
 
-    def read_table_factor(j: int) -> int:
-        """Consume one table factor starting at j; record ref if plain."""
-        while j < n and tokens[j].text == "(":
-            paren_ctx.append("")
-            j += 1
-        if j >= n:
-            return j
-        t = tokens[j]
-        if t.kind not in ("word", "qident"):
-            return j
-        low = t.text.lower()
-        if low in _NON_TABLE_KEYWORDS:
-            return j
-        # dotted name: a.b.c
-        parts = [_ident_text(t)]
-        j += 1
-        while (
-            j + 1 < n
-            and tokens[j].text == "."
-            and tokens[j + 1].kind in ("word", "qident")
-        ):
-            parts.append(_ident_text(tokens[j + 1]))
-            j += 2
-        name = ".".join(parts)
-        if name.lower() not in ctes and name.lower() not in seen:
-            seen.add(name.lower())
-            refs.append(name)
-        # optional alias ([AS] ident), then maybe ", next-factor"
-        if j < n and tokens[j].kind == "word" and tokens[j].text.lower() == "as":
-            j += 1
-        if (
-            j < n
-            and tokens[j].kind in ("word", "qident")
-            and tokens[j].text.lower() not in _NON_TABLE_KEYWORDS
-        ):
-            j += 1
-        if j < n and tokens[j].text == ",":
-            return read_table_factor(j + 1)
-        return j
-
-    while i < n:
-        t = tokens[i]
-        if t.text == "(":
-            paren_ctx.append((prev.text.lower() if prev else ""))
-        elif t.text == ")":
-            if paren_ctx:
-                paren_ctx.pop()
-        elif t.kind == "word":
-            low = t.text.lower()
-            if low == "from":
-                if paren_ctx and paren_ctx[-1] in _FROM_IN_ARGS:
-                    pass  # EXTRACT(field FROM expr) — not a table position
-                else:
-                    i = read_table_factor(i + 1)
-                    prev = tokens[i - 1] if i > 0 else None
-                    continue
-            elif low == "join":
-                i = read_table_factor(i + 1)
-                prev = tokens[i - 1] if i > 0 else None
-                continue
-        prev = t
-        i += 1
-    return refs
+    walk(json.loads(parser.parsePlan(query).toJSON()))
+    out: list[str] = []
+    seen = set(ctes)
+    for r in refs:
+        if r.lower() not in seen:
+            seen.add(r.lower())
+            out.append(r)
+    return out

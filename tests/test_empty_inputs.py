@@ -11,39 +11,29 @@ registry against a schema-identical, zero-row copy of the testdata.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 
 from powersql_spark.catalog import TABLES, read_parquet
 from powersql_spark.registry import all_specs
 
-_EMPTY_DIR: str | None = None
 
-
-def _empty_dir(spark) -> str:
-    global _EMPTY_DIR
-    if _EMPTY_DIR is None:
-        d = os.path.join(tempfile.gettempdir(), "powersql_empty_sf")
-        marker = os.path.join(d, "_OK")
-        if not os.path.exists(marker):
-            os.makedirs(d, exist_ok=True)
-            for t in TABLES:
-                df = read_parquet(spark, f"/root/testdata/sf0.001/{t}.parquet")
-                df.limit(0).write.mode("overwrite").parquet(
-                    os.path.join(d, f"{t}.parquet")
-                )
-            open(marker, "w").write("ok\n")
-        _EMPTY_DIR = d
-    return _EMPTY_DIR
+@pytest.fixture(scope="session")
+def empty_dir(spark, sf_dir, tmp_path_factory) -> str:
+    """A zero-row, schema-identical copy of every testdata table."""
+    d = tmp_path_factory.mktemp("empty_sf")
+    for t in TABLES:
+        df = read_parquet(spark, os.path.join(sf_dir, f"{t}.parquet"))
+        df.limit(0).write.parquet(str(d / f"{t}.parquet"))
+    return str(d)
 
 
 @pytest.mark.parametrize("key", sorted(all_specs()))
-def test_runs_on_empty_input(spark, key):
+def test_runs_on_empty_input(spark, empty_dir, key):
     spec = all_specs()[key]
     # load_tables re-registers views automatically: its cache is keyed
     # by path, and the empty copy's path differs from other tests'.
-    df = spec.fn(spark, _empty_dir(spark))
+    df = spec.fn(spark, empty_dir)
     rows = df.collect()
     assert isinstance(rows, list)
     # Grand-total aggregates legitimately return one (null/zero) row,

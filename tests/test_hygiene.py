@@ -64,3 +64,29 @@ def test_local_dirs_respects_shm_free_space(monkeypatch):
     assert s._local_dirs(None) == "/dev/shm/powersql_spark_local"
     # cluster masters never inherit tmpfs regardless of free space
     assert s._local_dirs("spark://host:7077") is None
+
+
+def test_connector_stage_dir_does_not_leak(tmp_path):
+    """Importing the contract module and building every oracle creates
+    nothing under the temp dir; the connectors' stage dir appears only
+    once a key writes into it, and is gone after the process exits."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import os, tempfile\n"
+        "import __spark_entry__\n"
+        "assert __spark_entry__.oracle_sql()\n"
+        "assert os.listdir(tempfile.gettempdir()) == []\n"
+        "from powersql_spark.operators.connectors import _stage_path\n"
+        "open(_stage_path('probe.csv'), 'w').write('x')\n"
+    )
+    subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=PKG.parent,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        check=True,
+        timeout=120,
+    )
+    assert os.listdir(tmp_path) == []

@@ -26,6 +26,7 @@ from powersql_spark.orchestrator.sqlparse import (
     parse_model_statement,
     parse_test_file,
     split_statements,
+    sql_parser,
 )
 
 # ---------- parsing ----------
@@ -58,12 +59,26 @@ def test_split_statements_preserves_operators():
     assert stmts == ["CREATE VIEW a AS SELECT 1 >= 0 AS b"]
 
 
+def test_split_statements_lexes_like_spark():
+    """A backslash-escaped quote stays inside its literal, and bracketed
+    comments nest: neither hides nor invents a ';'."""
+    assert split_statements(
+        "CREATE VIEW v AS SELECT 'a\\';b' AS s; CREATE VIEW w AS SELECT 1"
+    ) == ["CREATE VIEW v AS SELECT 'a\\';b' AS s", "CREATE VIEW w AS SELECT 1"]
+    assert split_statements(
+        "CREATE VIEW v AS SELECT 1 /* a /* b; */ c; */ AS n; SELECT 2"
+    ) == ["CREATE VIEW v AS SELECT 1   AS n", "SELECT 2"]
+
+
 def test_parse_test_file():
     tests = parse_test_file(
         "ASSERT NOT EXISTS (SELECT 1 FROM t WHERE x < 0) AS 'no negatives';\n"
-        "ASSERT (SELECT COUNT(*) FROM t) >= 10 AS 'enough rows';"
+        "ASSERT (SELECT COUNT(*) FROM t) >= 10 AS 'enough rows';\n"
+        "ASSERT 'a;b' <> 'c' AS 'it\\'s a ''quote'''"
     )
-    assert [t.message for t in tests] == ["no negatives", "enough rows"]
+    assert [t.message for t in tests] == [
+        "no negatives", "enough rows", "it's a 'quote'"
+    ]
     assert tests[0].condition.startswith("NOT EXISTS")
 
 
@@ -75,62 +90,167 @@ def test_parse_test_rejects_other():
 # ---------- ref extraction (reference src/main.rs:463-487) ----------
 
 
-def test_dependencies():
+@pytest.fixture(scope="module")
+def parser(spark):
+    return sql_parser(spark)
+
+
+def test_dependencies(parser):
     # Mirrors test_dependencies (src/main.rs:463-471).
     models = parse_model_file("CREATE VIEW z AS SELECT a FROM x")
-    assert extract_refs(models["z"].query) == ["x"]
+    assert extract_refs(parser, models["z"].query) == ["x"]
+    # Spark-only relation forms.
+    assert extract_refs(parser, "TABLE base") == ["base"]
+    assert extract_refs(parser, "SELECT * FROM IDENTIFIER('base')") == ["base"]
 
 
-def test_dependencies_join():
+def test_dependencies_join(parser):
     # Mirrors test_dependencies_join (src/main.rs:473-487): y join x.
-    refs = extract_refs("SELECT a FROM y JOIN x ON 1 = 1")
+    refs = extract_refs(parser, "SELECT a FROM y JOIN x ON 1 = 1")
     assert sorted(refs) == ["x", "y"]
 
 
-def test_refs_cte_excluded():
+def test_refs_cte_excluded(parser):
     refs = extract_refs(
-        "WITH c AS (SELECT * FROM base) SELECT * FROM c JOIN other ON 1=1"
+        parser,
+        "WITH c AS (SELECT * FROM base) SELECT * FROM c JOIN other ON 1=1",
     )
     assert sorted(refs) == ["base", "other"]
-
-
-def test_refs_subquery_in_where():
+    # A nested WITH binds its names too.
     refs = extract_refs(
-        "SELECT a FROM t WHERE a IN (SELECT b FROM u) AND EXISTS (SELECT 1 FROM v)"
+        parser,
+        "WITH c AS (WITH d AS (SELECT * FROM base) SELECT * FROM d)"
+        " SELECT * FROM c",
+    )
+    assert refs == ["base"]
+
+
+def test_refs_subquery_in_where(parser):
+    refs = extract_refs(
+        parser,
+        "SELECT a FROM t WHERE a IN (SELECT b FROM u) AND EXISTS (SELECT 1 FROM v)",
     )
     assert sorted(refs) == ["t", "u", "v"]
 
 
-def test_refs_derived_table():
-    refs = extract_refs("SELECT * FROM (SELECT a FROM inner_t) AS d")
+def test_refs_derived_table(parser):
+    refs = extract_refs(parser, "SELECT * FROM (SELECT a FROM inner_t) AS d")
     assert refs == ["inner_t"]
 
 
-def test_refs_nested_join():
-    refs = extract_refs("SELECT * FROM (a JOIN b ON a.x = b.x) JOIN c ON 1=1")
+def test_refs_nested_join(parser):
+    refs = extract_refs(parser, "SELECT * FROM (a JOIN b ON a.x = b.x) JOIN c ON 1=1")
     assert sorted(refs) == ["a", "b", "c"]
 
 
-def test_refs_comma_from_list():
-    refs = extract_refs("SELECT * FROM a, b WHERE a.x = b.x")
+def test_refs_comma_from_list(parser):
+    refs = extract_refs(parser, "SELECT * FROM a, b WHERE a.x = b.x")
     assert sorted(refs) == ["a", "b"]
 
 
-def test_refs_extract_not_a_table():
-    refs = extract_refs("SELECT EXTRACT(YEAR FROM ts) FROM evts")
+def test_refs_extract_not_a_table(parser):
+    refs = extract_refs(parser, "SELECT EXTRACT(YEAR FROM ts) FROM evts")
     assert refs == ["evts"]
+    # Neither an escaped quote nor a nested comment hides or invents a ref.
+    refs = extract_refs(parser, "SELECT 'a\\'b' AS s FROM base WHERE x = 'c'")
+    assert refs == ["base"]
+    refs = extract_refs(parser, "SELECT 1 /* a /* b */ FROM ghost */ FROM base")
+    assert refs == ["base"]
 
 
-def test_refs_dotted_and_quoted():
-    refs = extract_refs('SELECT * FROM sch.tab JOIN "Weird Name" ON 1=1')
-    assert refs == ["sch.tab", "Weird Name"]
+def test_refs_dotted_and_quoted(spark, parser):
+    """The session's grammar decides what "..." is: a string literal by
+    default, so it cannot name a table (running the model fails the
+    same way); an identifier under doubleQuotedIdentifiers, also when
+    the parse runs on another thread."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.errors import ParseException
+
+    query = 'SELECT * FROM sch.tab JOIN "Weird Name" ON 1=1'
+    with pytest.raises(ParseException):
+        extract_refs(parser, query)
+    spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
+    try:
+        assert extract_refs(parser, query) == ["sch.tab", "Weird Name"]
+        models = parse_model_file(
+            'CREATE VIEW "Weird Name" AS SELECT 1 AS c;'
+            f"CREATE VIEW v AS {query}"
+        )
+        with ThreadPoolExecutor(1) as pool:
+            deps = pool.submit(get_dependencies, spark, models).result()
+        assert deps == {"Weird Name": [], "v": ["Weird Name"]}
+    finally:
+        spark.conf.unset("spark.sql.ansi.doubleQuotedIdentifiers")
 
 
-def test_backtick_identifiers():
+def test_unparsable_model_is_a_clean_error(spark, tmp_path, monkeypatch, capsys):
+    """A model Spark cannot parse fails the project load with a
+    ValueError naming it; the CLI prints it and exits 1."""
+    from powersql_spark import session
+    from powersql_spark.orchestrator.cli import main
+    from powersql_spark.orchestrator.runner import load_project
+
+    (tmp_path / "powersql.toml").write_text(
+        '[project]\nname = "bad"\nmodels = ["models"]\n'
+    )
+    (tmp_path / "models").mkdir()
+    (tmp_path / "models" / "m.sql").write_text(
+        'CREATE VIEW ok AS SELECT 1 AS c; CREATE VIEW broken AS SELECT * FROM "x"'
+    )
+    with pytest.raises(ValueError, match="Model broken does not parse"):
+        load_project(spark, tmp_path)
+    monkeypatch.setattr(session, "build_session", lambda **kw: spark)
+    assert main(["check", "--project", str(tmp_path)]) == 1
+    assert capsys.readouterr().err.startswith("error: Model broken does not parse")
+
+
+def test_perfbench_project_deps(spark):
+    """The refs of the benchmark's seeded project are the edges it
+    declares."""
+    from perfbench.project import models
+
+    for seed in (3, 7, 11):
+        defs = models(seed)
+        parsed = {d.name: parse_model_statement(d.statement()) for d in defs}
+        deps = get_dependencies(spark, parsed)
+        assert {n: sorted(r) for n, r in deps.items()} == {
+            d.name: sorted(d.deps) for d in defs
+        }, seed
+
+
+def test_tracer_installs_and_uninstalls(spark):
+    """perfbench's tracer (`run.py --trace 1`) patches orchestrator
+    functions by name: each must still exist, load_project must run
+    through the patches, and uninstall must restore every one."""
+    from perfbench.tracing import Tracer
+
+    from powersql_spark.orchestrator import dag, runner
+
+    def patched():
+        return (runner.get_dependencies, runner.parse_model_file, dag.extract_refs)
+
+    before = patched()
+    tracer = Tracer(spark)
+    tracer.install()
+    try:
+        assert all(a is not b for a, b in zip(patched(), before))
+        runner.load_project(spark, PROJECT)
+        assert {
+            "orchestrator.sqlparse.parse",
+            "orchestrator.sqlparse.extract_refs",
+            "orchestrator.dag.plan",
+        } <= {s.name for s in tracer.spans}
+    finally:
+        tracer.uninstall()
+    assert patched() == before
+
+
+def test_backtick_identifiers(parser):
     """Models run as Spark SQL, whose native identifier quote is the
     backtick: a quoted name is a ref, and a ';' inside it splits nothing."""
-    assert extract_refs("SELECT * FROM `stg` JOIN b USING (k)") == ["stg", "b"]
-    assert extract_refs("SELECT 1 FROM `a``b`.`c d`") == ["a`b.c d"]
+    assert extract_refs(parser, "SELECT * FROM `stg` JOIN b USING (k)") == ["stg", "b"]
+    assert extract_refs(parser, "SELECT 1 FROM `a``b`.`c d`") == ["a`b.c d"]
     assert split_statements("CREATE VIEW `x;y` AS SELECT 1") == [
         "CREATE VIEW `x;y` AS SELECT 1"
     ]
@@ -138,8 +258,9 @@ def test_backtick_identifiers():
 
 
 def test_backtick_ref_orders_the_run(spark, tmp_path):
-    """A backtick-quoted ref is a DAG edge: `consumer` sorts first by
-    file name but must run after the `base` it reads."""
+    """A backtick-quoted ref is a DAG edge, and so is a ref after an
+    escaped quote: `quoted` and `consumer` sort before `base` by file
+    name but must run after the `base` they read."""
     from powersql_spark.orchestrator.runner import run
 
     (tmp_path / "powersql.toml").write_text(
@@ -149,11 +270,15 @@ def test_backtick_ref_orders_the_run(spark, tmp_path):
     (tmp_path / "models" / "a_consumer.sql").write_text(
         "CREATE TABLE consumer AS SELECT n*10 AS m FROM `base`"
     )
+    (tmp_path / "models" / "a_a_quoted.sql").write_text(
+        "CREATE TABLE quoted AS SELECT 'a\\'b' AS s, n FROM base WHERE 'x' <> 'c'"
+    )
     (tmp_path / "models" / "b_base.sql").write_text(
         "CREATE TABLE base AS SELECT 1 AS n"
     )
-    assert run(spark, tmp_path, sources=SOURCES) == ["base", "consumer"]
+    assert run(spark, tmp_path, sources=SOURCES) == ["base", "quoted", "consumer"]
     assert spark.table("consumer").collect()[0]["m"] == 10
+    assert spark.table("quoted").collect()[0]["s"] == "a'b"
 
 
 # ---------- DAG (reference src/main.rs:489-548) ----------
@@ -183,12 +308,12 @@ def test_build_graph():
     assert graph["y"] == ModelNode(live_parents=0, next_nodes=["x"])
 
 
-def test_external_sources_filtered():
+def test_external_sources_filtered(spark):
     models = parse_model_file(
         "CREATE VIEW a AS SELECT * FROM ext_source;"
         "CREATE VIEW b AS SELECT * FROM a"
     )
-    deps = get_dependencies(models)
+    deps = get_dependencies(spark, models)
     assert deps == {"a": [], "b": ["a"]}
 
 
@@ -202,7 +327,6 @@ SOURCES = "/root/testdata/sf0.001"
 def clean_target():
     yield
     shutil.rmtree(f"{PROJECT}/target", ignore_errors=True)
-    shutil.rmtree(f"{PROJECT}/docs", ignore_errors=True)
 
 
 def test_check_command(spark):
@@ -412,10 +536,13 @@ def test_pipeline_example_project(spark, capsys):
         shutil.rmtree("examples/pipeline/target", ignore_errors=True)
 
 
-def test_docs_command(tmp_path):
+def test_docs_command(spark, tmp_path):
     from powersql_spark.orchestrator.runner import docs
 
-    path = docs(PROJECT)
+    project = tmp_path / "project"
+    shutil.copytree(PROJECT, project, ignore=shutil.ignore_patterns("target", "docs"))
+    path = docs(spark, project)
+    assert path == project / "docs" / "docs.md"
     content = path.read_text()
     assert "revenue --> rev_per_product" in content
     assert "## top_products" in content
@@ -601,7 +728,7 @@ def test_restore_launches_no_spark_job(spark):
     )
 
     run(spark, PROJECT, sources=SOURCES)
-    project = load_project(PROJECT)
+    project = load_project(spark, PROJECT)
     ex = SparkExecutor(spark, f"{PROJECT}/target")
     assert "table" in {m.kind for m in project.models.values()}
     assert _jobs_launched(spark, lambda: _restore_models(project, ex)) == 0

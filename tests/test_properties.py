@@ -1,8 +1,10 @@
 """Property-based tests (hypothesis) for the orchestration layer — the
-pure-Python pieces whose input space is combinatorial: dependency
-extraction, cycle detection, scheduling. Mirrors and extends the
-reference's unit-test strategy (src/main.rs:463-548) with generated
-cases instead of three fixtures. No Spark session needed.
+pieces whose input space is combinatorial: dependency extraction, cycle
+detection, scheduling. Mirrors and extends the reference's unit-test
+strategy (src/main.rs:463-548) with generated cases instead of three
+fixtures. Only the parse round-trip needs the Spark session (refs come
+from its parser); the rest, and the kernel mirrors below, are pure
+Python.
 """
 
 from __future__ import annotations
@@ -112,7 +114,7 @@ def test_build_graph_degrees_consistent(deps):
 
 @given(random_dags())
 @settings(max_examples=100, deadline=None)
-def test_parse_roundtrip_models_and_deps(deps):
+def test_parse_roundtrip_models_and_deps(spark, deps):
     """Generate a model file whose FROM/JOIN clauses encode ``deps``
     exactly; parsing + extraction must reproduce them. External tables
     (never defined as models) must be filtered out of the DAG, like the
@@ -129,7 +131,7 @@ def test_parse_roundtrip_models_and_deps(deps):
     models = parse_model_file(";\n".join(stmts) + ";")
     assert set(models) == set(deps)
     assert all(isinstance(m, Model) for m in models.values())
-    extracted = get_dependencies(models)
+    extracted = get_dependencies(spark, models)
     assert {n: sorted(r) for n, r in extracted.items()} == {
         n: sorted(r) for n, r in deps.items()
     }
