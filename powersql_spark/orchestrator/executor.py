@@ -24,6 +24,14 @@ one Spark stored in the target's parquet footer. Either way the
 read-back launches no schema-inference job (Spark's one-task footer
 scan per bare ``spark.read.parquet``), and the registered schema is the
 same, since a user schema is made nullable exactly as an inferred one.
+
+ASSERT conditions are evaluated together, as the columns of one
+``SELECT`` over no table (``query_bool``), and ``check`` types them from
+the same projection (``condition_types``). The reference sends one
+``SELECT (cond)`` per test (src/main.rs:430-454); one query instead
+lets Catalyst reuse identical subqueries, merge scalar aggregates over
+the same relation (``MergeScalarSubqueries``) and run the subqueries
+concurrently, so a project's tests launch about half the Spark jobs.
 """
 
 from __future__ import annotations
@@ -84,11 +92,33 @@ class SparkExecutor:
         df.createOrReplaceTempView(model.name)
         return df
 
-    def query_bool(self, condition: str) -> bool:
-        """SELECT (cond) AS condition, read one boolean cell
-        (src/main.rs:439-440, src/execute.rs:124-130)."""
-        row = self.spark.sql(f"SELECT ({condition}) AS condition").first()
-        return bool(row[0]) if row is not None and row[0] is not None else False
+    def query_bool(self, conditions: list[str]) -> list[bool]:
+        """Evaluate every condition in one query, ``SELECT (c0) AS c0,
+        (c1) AS c1, …``, and read its one row; a NULL reads as False
+        (src/main.rs:439-440, src/execute.rs:124-130, one query per
+        condition there). One condition that raises fails the whole
+        query: ``runner.test`` then calls this once per condition, so
+        the first bad one raises its own error in file order."""
+        if not conditions:
+            return []
+        row = self.spark.sql(_conditions_query(conditions)).first()
+        return [v is not None and bool(v) for v in row]
+
+    def condition_types(self, conditions: list[str]) -> list[str]:
+        """Analysis only: the type of each condition, from the same
+        one-query projection ``query_bool`` runs."""
+        if not conditions:
+            return []
+        df = self.spark.sql(_conditions_query(conditions))
+        return [f.dataType.simpleString() for f in df.schema]
+
+
+def _conditions_query(conditions: list[str]) -> str:
+    """One column per condition. Each condition and each closing
+    parenthesis sits on its own line, so a condition that ends in a
+    ``--`` comment cannot swallow what follows it."""
+    cols = ",\n".join(f"(\n{c}\n) AS c{i}" for i, c in enumerate(conditions))
+    return f"SELECT {cols}"
 
 
 def _stored_schema(path: str) -> StructType | None:

@@ -111,6 +111,17 @@ def _register_analysis_env(
         _register_schema_manifest(spark, cfg_schema)
 
 
+def _batched(fn, items: list):
+    """``fn(items)`` in one call. If that raises, ``fn`` one item at a
+    time instead, lazily: the caller consumes the results before the
+    first bad item, then that item raises its own error, in file order,
+    as it did when every item was its own call."""
+    try:
+        return fn(items)
+    except Exception:
+        return (fn([item])[0] for item in items)
+
+
 def check(
     spark: SparkSession,
     project_dir: str | Path,
@@ -121,7 +132,8 @@ def check(
     jobs run; analysis errors are check failures (src/main.rs:348-386).
     Returns {model: schema DDL}. Strictly stronger than the reference's
     gradual Any-typing (SURVEY.md §1.2); with a schema manifest it is
-    also data-free like the reference's."""
+    also data-free like the reference's. The ASSERT conditions are
+    typed in one analysis, of the projection ``test`` runs."""
     project = load_project(spark, project_dir)
     _register_analysis_env(spark, sources, sources_schema, project)
     ex = SparkExecutor(spark, Path(project_dir) / "target")
@@ -130,9 +142,8 @@ def check(
         df = ex.analyze(project.models[name])
         schemas[name] = df.schema.simpleString()
     # Test conditions must type as boolean (src/main.rs:378-385).
-    for t in project.tests:
-        df = spark.sql(f"SELECT ({t.condition}) AS condition")
-        dtype = df.schema[0].dataType.simpleString()
+    types = _batched(ex.condition_types, [t.condition for t in project.tests])
+    for t, dtype in zip(project.tests, types):
         if dtype != "boolean":
             raise TypeError(
                 f"Test condition must be boolean, got {dtype}: {t.message}"
@@ -201,19 +212,24 @@ def _load_manifest(project_dir: str | Path) -> dict[str, str]:
 
 
 def _save_manifest(
-    project_dir: str | Path, project, executed: list[str]
+    project_dir: str | Path, project, executed: list[str], failed=()
 ) -> None:
-    """Merge the executed models' current hashes into the state file;
-    entries for models no longer in the project are dropped."""
+    """Merge the executed models' current hashes into the state file.
+    An entry is dropped, so that ``run --changed`` rebuilds the model
+    and its downstream closure, for a model no longer in the project, a
+    model whose materialization failed (its target may be half-written),
+    and a model this run left alone downstream of one it rebuilt from
+    new SQL (after a failure, or outside a ``--model`` selection)."""
     import json
 
+    old = _load_manifest(project_dir)
+    new = {name: _model_hash(project.models[name]) for name in executed}
+    rebuilt = {name for name, h in new.items() if old.get(name) != h}
+    drop = set(failed) | _descendant_closure(project.deps, rebuilt)
     manifest = {
-        k: v
-        for k, v in _load_manifest(project_dir).items()
-        if k in project.models
+        k: v for k, v in old.items() if k in project.models and k not in drop
     }
-    for name in executed:
-        manifest[name] = _model_hash(project.models[name])
+    manifest.update(new)
     path = _manifest_path(project_dir)
     path.parent.mkdir(parents=True, exist_ok=True)
     path.write_text(json.dumps(manifest, indent=1, sort_keys=True))
@@ -234,7 +250,12 @@ def run(
     manifest written by the previous run, plus their DOWNSTREAM closure
     (dbt's ``state:modified+`` — at 100 TB you rebuild the subgraph an
     edit invalidated, not the whole project). Every run merges the
-    executed models' hashes back into ``target/manifest.json``."""
+    executed models' hashes back into ``target/manifest.json``, a failed
+    run too: the models that succeeded are banked and the failed ones
+    dropped. Serial mode stops at the first failure and re-raises it;
+    parallel mode starts nothing new after a failure, lets the models in
+    flight finish, and raises an ``ExceptionGroup`` naming every failed
+    model."""
     project = load_project(spark, project_dir)
     _register_sources(spark, sources, project)
     ex = SparkExecutor(spark, Path(project_dir) / "target")
@@ -263,11 +284,15 @@ def run(
         for name in project.order:
             if name in needed and name not in keep:
                 ex.restore(project.models[name])
+    done: list[str] = []
     if not parallel:
-        for name in order:
-            ex.execute(project.models[name])
-        _save_manifest(project_dir, project, order)
-        return order
+        try:
+            for name in order:
+                ex.execute(project.models[name])
+                done.append(name)
+        finally:  # the model after the last one done is the one that raised
+            _save_manifest(project_dir, project, done, order[len(done) : len(done) + 1])
+        return done
 
     # Kahn with concurrent submission of ready models. Parents outside
     # the selection (possible under --changed: an unchanged upstream is
@@ -278,30 +303,36 @@ def run(
         n: [p for p in project.deps[n] if p in kept] for n in order
     }
     graph = build_graph(sub_deps)
-    done: list[str] = []
+    failed: dict[str, Exception] = {}
     with ThreadPoolExecutor(max_workers=8) as pool:
-        futures = {}
+        running = {}  # future -> model name
 
         def submit_ready() -> None:
+            if failed:  # after a failure, only drain what is in flight
+                return
             for name, node in graph.items():
-                if node.live_parents == 0 and name not in futures:
-                    futures[name] = pool.submit(ex.execute, project.models[name])
+                if node.live_parents == 0:
+                    node.live_parents = -1  # submitted
+                    running[pool.submit(ex.execute, project.models[name])] = name
 
         submit_ready()
-        pending = set(futures.values())
-        while pending:
-            finished, pending = wait(pending, return_when="FIRST_COMPLETED")
+        while running:
+            finished, _ = wait(running, return_when="FIRST_COMPLETED")
             for fut in finished:
-                fut.result()  # propagate errors
-                name = next(k for k, v in futures.items() if v is fut)
+                name = running.pop(fut)
+                if (err := fut.exception()) is not None:
+                    err.add_note(f"while materializing model {name}")
+                    failed[name] = err
+                    continue
                 done.append(name)
-                graph[name].live_parents = -1
                 for child in graph[name].next_nodes:
                     graph[child].live_parents -= 1
-            before = set(futures.values())
             submit_ready()
-            pending |= set(futures.values()) - before
-    _save_manifest(project_dir, project, done)
+    _save_manifest(project_dir, project, done, failed)
+    if failed:
+        raise ExceptionGroup(
+            f"models failed: {', '.join(failed)}", list(failed.values())
+        )
     return done
 
 
@@ -324,14 +355,24 @@ def test(
     fail_fast: bool = False,
 ) -> int:
     """Run ASSERT data tests; returns the exit code (0 ok, 1 failures),
-    printing OK/ERROR per test (src/main.rs:430-454)."""
+    printing OK/ERROR per test in file order (src/main.rs:430-454).
+
+    Every condition is evaluated in one Spark query
+    (``SparkExecutor.query_bool``), where the reference sends one query
+    per test: Catalyst then reuses identical subqueries, merges scalar
+    aggregates over one relation and runs the subqueries concurrently.
+    If that query raises (say, one condition's scalar subquery returns
+    two rows), the conditions are evaluated one at a time: the lines
+    before the bad condition print and its own error raises, as when
+    each test was its own query. ``fail_fast`` stops at the first
+    ERROR."""
     project = load_project(spark, project_dir)
     _register_sources(spark, sources, project)
     ex = SparkExecutor(spark, Path(project_dir) / "target")
     _restore_models(project, ex)
+    results = _batched(ex.query_bool, [t.condition for t in project.tests])
     exit_code = 0
-    for t in project.tests:
-        ok = ex.query_bool(t.condition)
+    for t, ok in zip(project.tests, results):
         if ok:
             print(f"{t.message}...OK")
         else:
@@ -363,7 +404,6 @@ def explain(
     plans: dict[str, str] = {}
     for name in order:
         df = ex.analyze(project.models[name])
-        df.createOrReplaceTempView(name)
         plans[name] = spark.sparkContext._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

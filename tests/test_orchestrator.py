@@ -856,3 +856,271 @@ def test_restore_falls_back_to_inference(spark, tmp_path):
     assert _stored_schema(str(tmp_path / "corrupt")) is None
     with pytest.raises(Py4JJavaError, match="SparkException"):
         ex.restore(Model("corrupt", "table", "SELECT 0 AS a", ""))
+
+
+# ---------- ASSERTs evaluated as one query ----------
+
+
+def _write_assert_project(tmp_path, tests_sql):
+    (tmp_path / "powersql.toml").write_text(
+        '[project]\nname = "asserts"\nmodels = ["models"]\ntests = ["tests"]\n'
+    )
+    (tmp_path / "models").mkdir(exist_ok=True)
+    (tmp_path / "models" / "m.sql").write_text(
+        "CREATE VIEW m AS SELECT l_partkey AS x FROM lineitem"
+    )
+    (tmp_path / "tests").mkdir(exist_ok=True)
+    (tmp_path / "tests" / "t.sql").write_text(tests_sql)
+
+
+def _count_calls(monkeypatch, cls, attr) -> list:
+    """Record the argument of every ``cls.attr`` call."""
+    calls = []
+    orig = getattr(cls, attr)
+
+    def counted(self, arg):
+        calls.append(arg)
+        return orig(self, arg)
+
+    monkeypatch.setattr(cls, attr, counted)
+    return calls
+
+
+def test_batched_asserts_print_every_line_in_file_order(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """One query evaluates every condition; a failing ASSERT before
+    passing ones still prints every line, a NULL condition is an ERROR,
+    and fail_fast prints nothing after the first ERROR."""
+    from powersql_spark.orchestrator.executor import SparkExecutor
+    from powersql_spark.orchestrator.runner import test as run_tests
+
+    _write_assert_project(
+        tmp_path,
+        "ASSERT (SELECT COUNT(*) FROM m) < 0 AS 'fails';\n"
+        "ASSERT (SELECT COUNT(*) FROM m) > 0 AS 'rows';\n"
+        "ASSERT CAST(NULL AS BOOLEAN) AS 'null';\n"
+        "ASSERT (SELECT MIN(x) FROM m) >= 0 AS 'min';\n",
+    )
+    calls = _count_calls(monkeypatch, SparkExecutor, "query_bool")
+    assert run_tests(spark, tmp_path, sources=SOURCES) == 1
+    assert capsys.readouterr().out.splitlines() == [
+        "fails...ERROR", "rows...OK", "null...ERROR", "min...OK",
+    ]
+    assert [len(c) for c in calls] == [4]
+
+    assert run_tests(spark, tmp_path, sources=SOURCES, fail_fast=True) == 1
+    assert capsys.readouterr().out.splitlines() == ["fails...ERROR"]
+
+
+def test_batched_assert_error_raises_in_file_order(spark, tmp_path, capsys):
+    """A condition that raises (a scalar subquery of many rows) fails
+    the one query; the conditions are then evaluated one at a time, so
+    the lines before it print and its own error is raised."""
+    from py4j.protocol import Py4JJavaError
+
+    from powersql_spark.orchestrator.executor import SparkExecutor
+    from powersql_spark.orchestrator.runner import test as run_tests
+
+    bad = "(SELECT x FROM m) = 1"
+    _write_assert_project(
+        tmp_path,
+        "ASSERT (SELECT COUNT(*) FROM m) > 0 AS 'rows';\n"
+        "ASSERT (SELECT MIN(x) FROM m) >= 0 AS 'min';\n"
+        f"ASSERT {bad} AS 'too many rows';\n"
+        "ASSERT (SELECT COUNT(*) FROM m) < 0 AS 'not reached';\n",
+    )
+    with pytest.raises(Py4JJavaError, match="SCALAR_SUBQUERY_TOO_MANY_ROWS") as got:
+        run_tests(spark, tmp_path, sources=SOURCES)
+    assert capsys.readouterr().out.splitlines() == ["rows...OK", "min...OK"]
+    with pytest.raises(Py4JJavaError) as alone:
+        SparkExecutor(spark, tmp_path / "target").query_bool([bad])
+    # The message carries the failing query's text: the condition's own.
+    assert (
+        got.value.java_exception.getMessage()
+        == alone.value.java_exception.getMessage()
+    )
+
+    # An ERROR before the bad condition under fail_fast: exit 1, no raise.
+    _write_assert_project(
+        tmp_path,
+        "ASSERT (SELECT COUNT(*) FROM m) < 0 AS 'fails';\n"
+        f"ASSERT {bad} AS 'too many rows';\n",
+    )
+    assert run_tests(spark, tmp_path, sources=SOURCES, fail_fast=True) == 1
+    assert capsys.readouterr().out.splitlines() == ["fails...ERROR"]
+
+
+def test_condition_ending_in_line_comment(spark, tmp_path):
+    """Each condition sits on its own lines in the one query, so a
+    trailing ``--`` comment cannot swallow the next column."""
+    from powersql_spark.orchestrator.executor import SparkExecutor
+
+    ex = SparkExecutor(spark, tmp_path)
+    conditions = ["1 = 1\n-- a note", "1 = 0 -- another", "TRUE"]
+    assert ex.query_bool(conditions) == [True, False, True]
+    assert ex.condition_types(conditions) == ["boolean"] * 3
+    assert ex.query_bool([]) == [] and ex.condition_types([]) == []
+
+
+def test_batched_asserts_share_subquery_jobs(spark, tmp_path):
+    """Catalyst reuses the repeated SUM subquery and merges the MAX over
+    the same model into it: the three conditions launch exactly the jobs
+    of the SUM condition alone."""
+    from powersql_spark.catalog import load_tables
+    from powersql_spark.orchestrator.executor import SparkExecutor
+    from powersql_spark.orchestrator.sqlparse import Model
+
+    load_tables(spark, SOURCES)
+    ex = SparkExecutor(spark, tmp_path)
+    ex.execute(Model("m_jobs", "view", "SELECT l_partkey AS x FROM lineitem", ""))
+    total = "(SELECT SUM(x) FROM m_jobs) > 0"
+    peak = "(SELECT MAX(x) FROM m_jobs) > 0"
+    alone = _jobs_launched(spark, lambda: ex.query_bool([total]))
+    assert alone > 0
+    assert _jobs_launched(spark, lambda: ex.query_bool([total, peak, total])) == alone
+
+
+def test_check_types_conditions_in_one_analysis(spark, tmp_path, monkeypatch):
+    """`check` analyzes every condition at once and names the first
+    non-boolean one in file order, also when a later one does not
+    analyze at all."""
+    from powersql_spark.orchestrator.executor import SparkExecutor
+    from powersql_spark.orchestrator.runner import check
+
+    _write_assert_project(
+        tmp_path,
+        "ASSERT (SELECT COUNT(*) FROM m) > 0 AS 'fine';\n"
+        "ASSERT (SELECT COUNT(*) FROM m) AS 'first bad';\n"
+        "ASSERT (SELECT MIN(x) FROM m) AS 'second bad';\n",
+    )
+    calls = _count_calls(monkeypatch, SparkExecutor, "condition_types")
+    with pytest.raises(TypeError, match="got bigint: first bad$"):
+        check(spark, tmp_path, sources=SOURCES)
+    assert [len(c) for c in calls] == [3]
+
+    _write_assert_project(
+        tmp_path,
+        "ASSERT (SELECT COUNT(*) FROM m) AS 'first bad';\n"
+        "ASSERT (SELECT 1 FROM no_such_table) = 1 AS 'unresolved';\n",
+    )
+    with pytest.raises(TypeError, match="got bigint: first bad$"):
+        check(spark, tmp_path, sources=SOURCES)
+
+
+# ---------- a failed run keeps the manifest truthful ----------
+
+
+@pytest.mark.parametrize("parallel", [False, True], ids=["serial", "parallel"])
+def test_failed_run_banks_what_succeeded(spark, tmp_path, parallel):
+    """After a good run, `mid` becomes a TABLE whose write raises: the
+    run raises, `mid`'s manifest entry is gone and every other entry is
+    its current hash, so `run --changed` rebuilds exactly `mid` and its
+    downstream `leaf` once it is mended."""
+    from powersql_spark.orchestrator.runner import _load_manifest, run
+
+    _write_chain_project(tmp_path)
+    run(spark, tmp_path, sources=SOURCES, parallel=parallel)
+    banked = _load_manifest(tmp_path)
+    assert set(banked) == {"base", "mid", "leaf", "other"}
+
+    (tmp_path / "models" / "mid.sql").write_text(
+        "CREATE TABLE mid AS SELECT k, v FROM base"
+        " WHERE raise_error('mid broke') IS NULL"
+    )
+    with pytest.raises(Exception, match="mid") as err:
+        run(spark, tmp_path, sources=SOURCES, parallel=parallel)
+    error = err.value
+    if parallel:
+        assert isinstance(error, ExceptionGroup)
+        (error,) = error.exceptions
+    assert "mid broke" in str(error)
+    del banked["mid"]
+    assert _load_manifest(tmp_path) == banked
+
+    (tmp_path / "models" / "mid.sql").write_text(
+        "CREATE TABLE mid AS SELECT k, v FROM base WHERE k < 4"
+    )
+    inc = run(spark, tmp_path, sources=SOURCES, changed=True, parallel=parallel)
+    assert set(inc) == {"mid", "leaf"}
+    assert spark.table("leaf").collect()[0]["n"] == 4
+
+
+def test_parallel_failure_drains_in_flight_and_names_every_failure(
+    spark, tmp_path, monkeypatch
+):
+    """Two of three sibling models fail: the third, in flight, finishes
+    and is banked, but nothing new starts (its child is not run), and
+    the raised group names both failed models."""
+    import threading
+
+    from powersql_spark.orchestrator.executor import SparkExecutor
+    from powersql_spark.orchestrator.runner import _load_manifest, run
+
+    (tmp_path / "powersql.toml").write_text(
+        '[project]\nname = "drain"\nmodels = ["models"]\n'
+    )
+    (tmp_path / "models").mkdir()
+    sql = {
+        "base": "SELECT n_nationkey AS k FROM nation",
+        "bad1": "SELECT k FROM base",
+        "bad2": "SELECT k + 1 AS k FROM base",
+        "slow": "SELECT k * 2 AS k FROM base",
+        "after_slow": "SELECT k FROM slow",
+    }
+    for name, query in sql.items():
+        (tmp_path / "models" / f"{name}.sql").write_text(
+            f"CREATE VIEW {name} AS {query}"
+        )
+    run(spark, tmp_path, sources=SOURCES)
+    banked = _load_manifest(tmp_path)
+
+    broke = {"bad1": threading.Event(), "bad2": threading.Event()}
+    executed = []
+    orig = SparkExecutor.execute
+
+    def execute(self, model):
+        executed.append(model.name)
+        if model.name in broke:
+            broke[model.name].set()
+            raise RuntimeError(f"{model.name} broke")
+        if model.name == "slow":
+            for event in broke.values():
+                assert event.wait(60)
+        return orig(self, model)
+
+    monkeypatch.setattr(SparkExecutor, "execute", execute)
+    with pytest.raises(ExceptionGroup) as err:
+        run(spark, tmp_path, sources=SOURCES, parallel=True)
+    assert "bad1" in str(err.value) and "bad2" in str(err.value)
+    assert sorted(str(e) for e in err.value.exceptions) == [
+        "bad1 broke", "bad2 broke",
+    ]
+    assert sorted(executed) == ["bad1", "bad2", "base", "slow"]
+    assert _load_manifest(tmp_path) == {
+        k: v for k, v in banked.items() if k not in broke
+    }
+
+    monkeypatch.setattr(SparkExecutor, "execute", orig)
+    assert sorted(run(spark, tmp_path, sources=SOURCES, changed=True)) == [
+        "bad1", "bad2",
+    ]
+
+
+def test_model_run_unbanks_stale_downstream(spark, tmp_path):
+    """`run --model mid` after an edit of `base` rebuilds base and mid;
+    `leaf` and `other` read the new base but were not rebuilt, so their
+    entries are dropped and the next `run --changed` rebuilds them."""
+    from powersql_spark.orchestrator.runner import _load_manifest, run
+
+    _write_chain_project(tmp_path)
+    run(spark, tmp_path, sources=SOURCES)
+    (tmp_path / "models" / "base.sql").write_text(
+        "CREATE VIEW base AS SELECT n_nationkey AS k, n_name AS v"
+        " FROM nation WHERE n_nationkey >= 1"
+    )
+    assert run(spark, tmp_path, sources=SOURCES, model="mid") == ["base", "mid"]
+    assert set(_load_manifest(tmp_path)) == {"base", "mid"}
+    inc = run(spark, tmp_path, sources=SOURCES, changed=True)
+    assert sorted(inc) == ["leaf", "other"]
+    assert spark.table("leaf").collect()[0]["n"] == 9

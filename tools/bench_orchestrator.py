@@ -8,6 +8,8 @@ modes back to back on the same session (one warmup run first so JIT /
 file-listing costs don't bias either side), then ``test`` against what
 they built, and prints one JSON line: seconds per command, the parallel
 speedup, and the Spark jobs each command launched.
+
+    python tools/bench_orchestrator.py [PROJECT_DIR]   # default examples/wide
 """
 from __future__ import annotations
 
@@ -24,7 +26,7 @@ sys.path.insert(
 from powersql_spark.orchestrator.runner import run, test  # noqa: E402
 from powersql_spark.session import build_session  # noqa: E402
 
-PROJECT = os.path.join(
+WIDE = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "examples",
     "wide",
@@ -32,6 +34,7 @@ PROJECT = os.path.join(
 
 
 def main() -> int:
+    project = sys.argv[1] if len(sys.argv) > 1 else WIDE
     spark = build_session(
         app_name="orchestrator_bench",
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
@@ -40,7 +43,7 @@ def main() -> int:
     # The scheduler numbers jobs in order as they are submitted, so the
     # id range a command spans counts its jobs, pool threads included.
     scheduler = spark.sparkContext._jsc.sc().dagScheduler()
-    run(spark, PROJECT)  # warmup (codegen, file listing)
+    models = run(spark, project)  # warmup (codegen, file listing)
     times, jobs = {}, {}
 
     def timed(name, fn):
@@ -51,10 +54,10 @@ def main() -> int:
         return out
 
     for mode, par in (("serial", False), ("parallel", True)):
-        order = timed(mode, lambda: run(spark, PROJECT, parallel=par))
-        assert len(order) == 9, order
+        order = timed(mode, lambda: run(spark, project, parallel=par))
+        assert sorted(order) == sorted(models), order
     with contextlib.redirect_stdout(sys.stderr):  # one OK line per ASSERT
-        rc = timed("test", lambda: test(spark, PROJECT))
+        rc = timed("test", lambda: test(spark, project))
     assert rc == 0, rc
     times["speedup"] = round(times["serial"] / times["parallel"], 2)
     print(json.dumps({**times, "jobs": jobs}))
