@@ -3,15 +3,14 @@
 Mirrors the reference's graph layer (src/main.rs:203-287): model ->
 referenced models (external sources filtered out, src/main.rs:221),
 cycle/missing-model detection (src/main.rs:229-254), and Kahn-style
-scheduling nodes (ModelNode { live_parents, next_nodes },
-src/main.rs:256-287). The refs come from the session's parser; the rest
-is pure Python — the inter-model DAG is orchestration state, not a Spark
-concern (Spark's own DAG is per-query).
+scheduling (src/main.rs:256-287), here ``graphlib.TopologicalSorter``.
+The refs come from the session's parser; the rest is pure Python — the
+inter-model DAG is orchestration state, not a Spark concern (Spark's
+own DAG is per-query).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
 from graphlib import CycleError, TopologicalSorter
 
 from pyspark.errors import ParseException
@@ -52,21 +51,13 @@ def detect_cycles(deps: dict[str, list[str]]) -> None:
         raise ValueError(f"Cycle detected: {e.args[1]}") from e
 
 
-@dataclass
-class ModelNode:
-    """Scheduling node (reference ModelNode, src/main.rs:256-261)."""
-
-    live_parents: int = 0
-    next_nodes: list[str] = field(default_factory=list)
-
-
-def build_graph(deps: dict[str, list[str]]) -> dict[str, ModelNode]:
-    """In-degree + adjacency (reference build_graph, src/main.rs:262-287)."""
-    graph: dict[str, ModelNode] = {name: ModelNode() for name in deps}
-    for name, refs in deps.items():
-        graph[name].live_parents = len(refs)
-        for r in refs:
-            graph[r].next_nodes.append(name)
+def build_graph(deps: dict[str, list[str]]) -> TopologicalSorter:
+    """A prepared scheduler over ``deps`` (reference build_graph,
+    src/main.rs:256-287): ``get_ready()`` hands out the models whose
+    parents are all done, ``done(name)`` releases its children. Every
+    parent must be a key of ``deps``, else it is scheduled as a node."""
+    graph = TopologicalSorter(deps)
+    graph.prepare()
     return graph
 
 

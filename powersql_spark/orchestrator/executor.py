@@ -19,11 +19,14 @@ checkpoint that downstream models re-scan columnar with pushdown,
 instead of recomputing the view chain.
 
 A TABLE is registered from a schema already known: after the write,
-the written DataFrame's; on restore (``test``, ``run --changed``), the
-one Spark stored in the target's parquet footer. Either way the
-read-back launches no schema-inference job (Spark's one-task footer
-scan per bare ``spark.read.parquet``), and the registered schema is the
-same, since a user schema is made nullable exactly as an inferred one.
+the written DataFrame's, which ``execute`` returns and the runner
+records in ``target/manifest.json``; on restore (``test``,
+``run --changed``), the one that manifest records. The manifest is the
+one record of what ``run`` built: a target it does not list with a
+schema is rebuilt, never read. Either way the read-back launches no
+schema-inference job (Spark's one-task footer scan per bare
+``spark.read.parquet``), and the registered schema is the same, since a
+user schema is made nullable exactly as an inferred one.
 
 ASSERT conditions are evaluated together, as the columns of one
 ``SELECT`` over no table (``query_bool``), and ``check`` types them from
@@ -36,8 +39,6 @@ concurrently, so a project's tests launch about half the Spark jobs.
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 from pathlib import Path
 
@@ -46,41 +47,42 @@ from pyspark.sql.types import StructType
 
 from powersql_spark.orchestrator.sqlparse import Model
 
-# Footer key under which Spark's parquet writer stores the row schema.
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
 
 class SparkExecutor:
     def __init__(self, spark: SparkSession, target_dir: str | Path):
         self.spark = spark
         self.target_dir = str(target_dir)
 
-    def execute(self, model: Model) -> None:
+    def execute(self, model: Model) -> StructType | None:
         """Materialize one model (reference Executor::execute,
-        src/execute.rs:77-111)."""
+        src/execute.rs:77-111). Returns a TABLE's schema, for the
+        manifest to record; None for a view."""
         if model.kind in ("view", "materialized_view"):
             self.spark.sql(
                 f"CREATE OR REPLACE TEMP VIEW {_q(model.name)} AS {model.query}"
             )
-        elif model.kind == "table":
+            return None
+        if model.kind == "table":
             path = os.path.join(self.target_dir, model.name)
             df = self.spark.sql(model.query)
             df.write.mode("overwrite").parquet(path)
             reader = self.spark.read.schema(df.schema)
             reader.parquet(path).createOrReplaceTempView(model.name)
-        else:  # pragma: no cover
-            raise ValueError(f"unknown model kind: {model.kind}")
+            return df.schema
+        raise ValueError(f"unknown model kind: {model.kind}")  # pragma: no cover
 
-    def restore(self, model: Model) -> None:
-        """Re-register a model without recomputing it: a TABLE whose
-        parquet target exists is read back; anything else is executed
-        (a view is lazy, a TABLE without a target is materialized)."""
+    def restore(self, model: Model, schema: StructType | None) -> None:
+        """Re-register a model without recomputing it. ``schema`` is the
+        one the manifest records for the model's TABLE target, or None
+        when the manifest does not vouch for one. With a schema and a
+        target directory, the target is read back with that schema;
+        anything else is executed (a view is lazy; a TABLE the manifest
+        does not vouch for is rebuilt)."""
         path = os.path.join(self.target_dir, model.name)
-        if model.kind != "table" or not os.path.isdir(path):
+        if model.kind != "table" or schema is None or not os.path.isdir(path):
             self.execute(model)
             return
-        schema = _stored_schema(path)
-        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        reader = self.spark.read.schema(schema)
         reader.parquet(path).createOrReplaceTempView(model.name)
 
     def analyze(self, model: Model) -> DataFrame:
@@ -119,25 +121,6 @@ def _conditions_query(conditions: list[str]) -> str:
     ``--`` comment cannot swallow what follows it."""
     cols = ",\n".join(f"(\n{c}\n) AS c{i}" for i, c in enumerate(conditions))
     return f"SELECT {cols}"
-
-
-def _stored_schema(path: str) -> StructType | None:
-    """The schema Spark wrote into the footer of the target's first part
-    file, or None (no part file, a footer without Spark's key, or one
-    pyarrow cannot read): the caller then lets Spark infer, which also
-    raises today's errors for an empty or corrupt target."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    parts = sorted(glob.glob(os.path.join(path, "part-*.parquet")))
-    if not parts:
-        return None
-    try:
-        meta = pq.read_metadata(parts[0]).metadata or {}
-    except (OSError, pa.ArrowException):
-        return None
-    stored = meta.get(_SPARK_SCHEMA_KEY)
-    return StructType.fromJson(json.loads(stored)) if stored else None
 
 
 def _q(name: str) -> str:

@@ -11,11 +11,14 @@ the free orchestration-level win the reference leaves on the table
 
 from __future__ import annotations
 
+import hashlib
+import json
 from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 from powersql_spark.catalog import load_tables
 from powersql_spark.orchestrator.config import PowerSqlConfig, load_config
@@ -39,11 +42,8 @@ class Project:
     config: PowerSqlConfig
     models: dict[str, Model]
     deps: dict[str, list[str]]
+    order: list[str]  # topological: parents before children
     tests: list[Test] = field(default_factory=list)
-
-    @property
-    def order(self) -> list[str]:
-        return topo_order(self.deps)
 
 
 def load_project(spark: SparkSession, project_dir: str | Path) -> Project:
@@ -58,7 +58,7 @@ def load_project(spark: SparkSession, project_dir: str | Path) -> Project:
     tests: list[Test] = []
     for path in config.test_files():
         tests.extend(parse_test_file(path.read_text()))
-    return Project(config=config, models=models, deps=deps, tests=tests)
+    return Project(config, models, deps, topo_order(deps), tests)
 
 
 def _register_sources(
@@ -79,8 +79,6 @@ def _register_schema_manifest(spark: SparkSession, path: str | Path) -> None:
     declared schema: the analyzer then type-checks every model with no
     source data on disk — the reference's data-free `check` ergonomics
     (src/types.rs:47-221 runs on the AST env, no warehouse needed)."""
-    import json
-
     manifest = json.loads(Path(path).read_text())
     for table, ddl in manifest.items():
         spark.createDataFrame([], ddl).createOrReplaceTempView(table)
@@ -193,14 +191,12 @@ def _manifest_path(project_dir: str | Path) -> Path:
 
 
 def _model_hash(model) -> str:
-    import hashlib
-
     return hashlib.md5(model.sql.encode()).hexdigest()
 
 
-def _load_manifest(project_dir: str | Path) -> dict[str, str]:
-    import json
-
+def _load_manifest(project_dir: str | Path) -> dict[str, dict]:
+    """The entries of ``target/manifest.json``; a missing or unreadable
+    file, or an entry that is not an object, reads as no entry."""
     path = _manifest_path(project_dir)
     if not path.exists():
         return {}
@@ -208,23 +204,35 @@ def _load_manifest(project_dir: str | Path) -> dict[str, str]:
         data = json.loads(path.read_text())
     except ValueError:
         return {}
-    return data if isinstance(data, dict) else {}
+    entries = data.items() if isinstance(data, dict) else ()
+    return {k: v for k, v in entries if isinstance(v, dict)}
 
 
-def _save_manifest(
-    project_dir: str | Path, project, executed: list[str], failed=()
-) -> None:
-    """Merge the executed models' current hashes into the state file.
-    An entry is dropped, so that ``run --changed`` rebuilds the model
-    and its downstream closure, for a model no longer in the project, a
+def _manifest_schema(manifest: dict[str, dict], name: str) -> StructType | None:
+    """The schema the manifest records for ``name``'s TABLE target, or
+    None: the manifest then does not vouch for a target."""
+    schema = manifest.get(name, {}).get("schema")
+    return None if schema is None else StructType.fromJson(schema)
+
+
+def _save_manifest(project_dir: str | Path, project, built: dict, failed=()) -> None:
+    """Merge the built models (each mapped to the schema ``execute``
+    returned) into ``target/manifest.json``, the one record of what
+    ``run`` built: per model ``{"hash": <md5 of its SQL>}``, plus for a
+    TABLE the ``"schema"`` (StructType JSON) ``restore`` reads its
+    target with. An entry is dropped, so that ``run --changed`` rebuilds
+    the model and its downstream closure and ``restore`` rebuilds it
+    rather than read its target, for a model no longer in the project, a
     model whose materialization failed (its target may be half-written),
     and a model this run left alone downstream of one it rebuilt from
     new SQL (after a failure, or outside a ``--model`` selection)."""
-    import json
-
     old = _load_manifest(project_dir)
-    new = {name: _model_hash(project.models[name]) for name in executed}
-    rebuilt = {name for name, h in new.items() if old.get(name) != h}
+    new = {}
+    for name, schema in built.items():
+        new[name] = {"hash": _model_hash(project.models[name])}
+        if schema is not None:
+            new[name]["schema"] = schema.jsonValue()
+    rebuilt = {n for n, e in new.items() if old.get(n, {}).get("hash") != e["hash"]}
     drop = set(failed) | _descendant_closure(project.deps, rebuilt)
     manifest = {
         k: v for k, v in old.items() if k in project.models and k not in drop
@@ -250,7 +258,7 @@ def run(
     manifest written by the previous run, plus their DOWNSTREAM closure
     (dbt's ``state:modified+`` — at 100 TB you rebuild the subgraph an
     edit invalidated, not the whole project). Every run merges the
-    executed models' hashes back into ``target/manifest.json``, a failed
+    built models' entries back into ``target/manifest.json``, a failed
     run too: the models that succeeded are banked and the failed ones
     dropped. Serial mode stops at the first failure and re-raises it;
     parallel mode starts nothing new after a failure, lets the models in
@@ -268,7 +276,7 @@ def run(
         dirty = {
             n
             for n in project.models
-            if manifest.get(n) != _model_hash(project.models[n])
+            if manifest.get(n, {}).get("hash") != _model_hash(project.models[n])
         }
         keep = _descendant_closure(project.deps, dirty)
         order = [n for n in order if n in keep]
@@ -277,27 +285,27 @@ def run(
         # session-scoped): restore those — and only those; models outside
         # the selected subgraph's ancestry (including ones a combined
         # --model filter deliberately excluded) stay untouched — without
-        # re-materializing table data.
+        # re-materializing table data the manifest vouches for.
         needed: set[str] = set()
         for name in order:
             needed |= _ancestor_closure(project.deps, name)
         for name in project.order:
             if name in needed and name not in keep:
-                ex.restore(project.models[name])
-    done: list[str] = []
+                ex.restore(project.models[name], _manifest_schema(manifest, name))
+    built: dict[str, StructType | None] = {}
     if not parallel:
         try:
             for name in order:
-                ex.execute(project.models[name])
-                done.append(name)
-        finally:  # the model after the last one done is the one that raised
-            _save_manifest(project_dir, project, done, order[len(done) : len(done) + 1])
-        return done
+                built[name] = ex.execute(project.models[name])
+        finally:  # the model after the last one built is the one that raised
+            failed = order[len(built) : len(built) + 1]
+            _save_manifest(project_dir, project, built, failed)
+        return list(built)
 
     # Kahn with concurrent submission of ready models. Parents outside
     # the selection (possible under --changed: an unchanged upstream is
     # restored above, not scheduled) are pruned from the subgraph edges,
-    # else build_graph KeyErrors on the missing node.
+    # else the sorter would schedule them as nodes of their own.
     kept = set(order)
     sub_deps = {
         n: [p for p in project.deps[n] if p in kept] for n in order
@@ -310,10 +318,8 @@ def run(
         def submit_ready() -> None:
             if failed:  # after a failure, only drain what is in flight
                 return
-            for name, node in graph.items():
-                if node.live_parents == 0:
-                    node.live_parents = -1  # submitted
-                    running[pool.submit(ex.execute, project.models[name])] = name
+            for name in graph.get_ready():
+                running[pool.submit(ex.execute, project.models[name])] = name
 
         submit_ready()
         while running:
@@ -324,28 +330,31 @@ def run(
                     err.add_note(f"while materializing model {name}")
                     failed[name] = err
                     continue
-                done.append(name)
-                for child in graph[name].next_nodes:
-                    graph[child].live_parents -= 1
+                built[name] = fut.result()
+                graph.done(name)
             submit_ready()
-    _save_manifest(project_dir, project, done, failed)
+    _save_manifest(project_dir, project, built, failed)
     if failed:
         raise ExceptionGroup(
             f"models failed: {', '.join(failed)}", list(failed.values())
         )
-    return done
+    return list(built)
 
 
-def _restore_models(project: Project, ex: SparkExecutor) -> None:
+def _restore_models(
+    project: Project, ex: SparkExecutor, manifest: dict[str, dict]
+) -> None:
     """Re-register models in a fresh session.
 
     The reference's backend is a persistent warehouse, so `test` sees
     what `run` built; Spark temp views are session-scoped. Views are
-    lazy — re-creating them is free; TABLE models load from the parquet
-    target written by `run` (falling back to materializing if absent).
+    lazy — re-creating them is free; a TABLE model loads from its
+    parquet target with the schema the manifest records, and one the
+    manifest does not vouch for (never built, or its last build failed)
+    is materialized again.
     """
     for name in project.order:
-        ex.restore(project.models[name])
+        ex.restore(project.models[name], _manifest_schema(manifest, name))
 
 
 def test(
@@ -365,11 +374,16 @@ def test(
     two rows), the conditions are evaluated one at a time: the lines
     before the bad condition print and its own error raises, as when
     each test was its own query. ``fail_fast`` stops at the first
-    ERROR."""
+    ERROR.
+
+    The models are restored from what ``target/manifest.json`` records,
+    so ``test`` may rebuild a TABLE the manifest does not vouch for (one
+    never built, or whose last build failed) and then raises that
+    model's own error if the build fails again."""
     project = load_project(spark, project_dir)
     _register_sources(spark, sources, project)
     ex = SparkExecutor(spark, Path(project_dir) / "target")
-    _restore_models(project, ex)
+    _restore_models(project, ex, _load_manifest(project_dir))
     results = _batched(ex.query_bool, [t.condition for t in project.tests])
     exit_code = 0
     for t, ok in zip(project.tests, results):

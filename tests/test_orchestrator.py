@@ -15,7 +15,6 @@ import shutil
 import pytest
 
 from powersql_spark.orchestrator.dag import (
-    ModelNode,
     build_graph,
     detect_cycles,
     get_dependencies,
@@ -302,10 +301,15 @@ def test_dag_ok():
 
 
 def test_build_graph():
-    # Mirrors test_build_graph in-degrees/adjacency (src/main.rs:522-548).
+    # Mirrors test_build_graph (src/main.rs:522-548): `y` has no parents
+    # and is ready first; `x` is released only once `y` is done.
     graph = build_graph({"x": ["y"], "y": []})
-    assert graph["x"] == ModelNode(live_parents=1, next_nodes=[])
-    assert graph["y"] == ModelNode(live_parents=0, next_nodes=["x"])
+    assert graph.get_ready() == ("y",)
+    assert graph.get_ready() == ()
+    graph.done("y")
+    assert graph.get_ready() == ("x",)
+    graph.done("x")
+    assert not graph.is_active()
 
 
 def test_external_sources_filtered(spark):
@@ -722,6 +726,7 @@ def test_restore_launches_no_spark_job(spark):
     and materializing a TABLE launches only the jobs of its write."""
     from powersql_spark.orchestrator.executor import SparkExecutor
     from powersql_spark.orchestrator.runner import (
+        _load_manifest,
         _restore_models,
         load_project,
         run,
@@ -730,8 +735,11 @@ def test_restore_launches_no_spark_job(spark):
     run(spark, PROJECT, sources=SOURCES)
     project = load_project(spark, PROJECT)
     ex = SparkExecutor(spark, f"{PROJECT}/target")
+    manifest = _load_manifest(PROJECT)
     assert "table" in {m.kind for m in project.models.values()}
-    assert _jobs_launched(spark, lambda: _restore_models(project, ex)) == 0
+    assert _jobs_launched(
+        spark, lambda: _restore_models(project, ex, manifest)
+    ) == 0
 
     table = project.models["top_products"]
     write_only = _jobs_launched(
@@ -781,7 +789,7 @@ def _assert_registered_as_inferred(spark, project_dir, names):
 
 def test_table_registration_keeps_inferred_schema(spark, tmp_path):
     """Registering a TABLE from its known schema (the written DataFrame's
-    after `run`, the footer's on `test` and `run --changed` restores)
+    after `run`, the manifest's on `test` and `run --changed` restores)
     gives exactly the schema and rows Spark's own inference gives."""
     from pyspark.sql.types import DecimalType, TimestampNTZType
 
@@ -822,40 +830,62 @@ def test_table_registration_keeps_inferred_schema(spark, tmp_path):
     assert spark.table("consumer").collect()[0]["n"] == 25
 
 
-def test_restore_falls_back_to_inference(spark, tmp_path):
-    """A target without Spark's footer schema (written by pyarrow)
-    restores through inference; a target with no part file, or with one
-    that is not parquet, raises Spark's error as bare inference does."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors import AnalysisException
-
-    from powersql_spark.orchestrator.executor import SparkExecutor, _stored_schema
-    from powersql_spark.orchestrator.sqlparse import Model
-
-    ex = SparkExecutor(spark, tmp_path)
-    (tmp_path / "arrow_t").mkdir()
-    pq.write_table(
-        pa.table({"a": [1, 2], "b": ["x", None]}),
-        tmp_path / "arrow_t" / "part-00000.parquet",
+def _write_table_chain_project(tmp_path, mid_sql):
+    """The chain project with `mid` a TABLE, and one ASSERT on `leaf`."""
+    _write_chain_project(tmp_path)
+    (tmp_path / "powersql.toml").write_text(
+        '[project]\nname = "inc"\nmodels = ["models"]\ntests = ["tests"]\n'
     )
-    assert _stored_schema(str(tmp_path / "arrow_t")) is None
-    ex.restore(Model("arrow_t", "table", "SELECT 0 AS a", ""))
-    inferred = spark.read.parquet(str(tmp_path / "arrow_t"))
-    assert spark.table("arrow_t").schema == inferred.schema
-    assert sorted(spark.table("arrow_t").collect()) == sorted(inferred.collect())
-    assert spark.table("arrow_t").count() == 2  # read back, not re-executed
+    (tmp_path / "models" / "mid.sql").write_text(mid_sql)
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "t.sql").write_text(
+        "ASSERT (SELECT n FROM leaf) = 4 AS 'leaf counts mid'"
+    )
 
-    (tmp_path / "no_parts").mkdir()
-    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
-        ex.restore(Model("no_parts", "table", "SELECT 0 AS a", ""))
 
-    (tmp_path / "corrupt").mkdir()
-    (tmp_path / "corrupt" / "part-00000.parquet").write_bytes(b"not parquet")
-    assert _stored_schema(str(tmp_path / "corrupt")) is None
-    with pytest.raises(Py4JJavaError, match="SparkException"):
-        ex.restore(Model("corrupt", "table", "SELECT 0 AS a", ""))
+_GOOD_MID = "CREATE TABLE mid AS SELECT k, v FROM base WHERE k < 4"
+
+
+def test_test_rebuilds_a_table_whose_build_failed(spark, tmp_path):
+    """After a good `run`, `mid`'s TABLE write raises and leaves an empty
+    `target/mid`. The manifest no longer vouches for it, so `test`
+    rebuilds `mid` and raises that model's own error instead of failing
+    to infer a schema; once the SQL is mended, `test` rebuilds it and
+    passes with no `run` in between."""
+    from powersql_spark.orchestrator.runner import run, test as run_tests
+
+    _write_table_chain_project(tmp_path, _GOOD_MID)
+    run(spark, tmp_path, sources=SOURCES)
+    (tmp_path / "models" / "mid.sql").write_text(
+        "CREATE TABLE mid AS SELECT k, v FROM base"
+        " WHERE raise_error('mid broke') IS NULL"
+    )
+    with pytest.raises(Exception, match="mid broke"):
+        run(spark, tmp_path, sources=SOURCES)
+    assert (tmp_path / "target" / "mid").is_dir()
+
+    with pytest.raises(Exception, match="USER_RAISED_EXCEPTION") as err:
+        run_tests(spark, tmp_path, sources=SOURCES)
+    assert "mid broke" in str(err.value)
+    assert "UNABLE_TO_INFER_SCHEMA" not in str(err.value)
+
+    (tmp_path / "models" / "mid.sql").write_text(_GOOD_MID)
+    assert run_tests(spark, tmp_path, sources=SOURCES) == 0
+    assert spark.table("mid").count() == 4
+
+
+def test_test_rebuilds_a_target_the_manifest_does_not_list(spark, tmp_path):
+    """A `target/mid` holding a part file that no `run` recorded is
+    rebuilt from the model's SQL, not registered."""
+    from powersql_spark.orchestrator.runner import _load_manifest, test as run_tests
+
+    _write_table_chain_project(tmp_path, _GOOD_MID)
+    spark.createDataFrame([(99, "stray")], "k INT, v STRING").write.parquet(
+        str(tmp_path / "target" / "mid")
+    )
+    assert _load_manifest(tmp_path) == {}
+    assert run_tests(spark, tmp_path, sources=SOURCES) == 0
+    assert sorted(r["k"] for r in spark.table("mid").collect()) == [0, 1, 2, 3]
 
 
 # ---------- ASSERTs evaluated as one query ----------
