@@ -127,6 +127,14 @@ def parse_model_statement(stmt: str) -> Model:
     name = m.group("name")
     if name[0] in '"`':
         name = _unquote(name)
+    if ", " in name:
+        # extract_refs reads a ref `x, y` as x.y: a model reading this
+        # one would lose its DAG edge and could run before it.
+        raise ValueError(
+            f"Model name {name!r} contains ', ': a reference to it reads "
+            "as a dotted name, so the models that read it could not be "
+            "ordered after it: " + stmt[:80]
+        )
     return Model(name=name, kind=kind, query=m.group("query").strip(), sql=stmt)
 
 
@@ -171,10 +179,14 @@ def extract_refs(parser, query: str) -> list[str]:
     """Table names this query reads (reference get_refs, src/main.rs:53-142),
     in plan order, first spelling kept, minus names bound by WITH.
 
-    Collects every ``UnresolvedRelation`` (a dotted name; the plan's JSON
-    joins its parts with ", ", so a quoted part containing ", " reads as
-    two parts) and every ``IDENTIFIER('literal')``. Raises Spark's
-    ``ParseException`` on a query the session cannot parse.
+    Collects every ``UnresolvedRelation`` (a dotted name) and every
+    ``IDENTIFIER('literal')``. Raises Spark's ``ParseException`` on a
+    query the session cannot parse.
+
+    The plan's JSON joins a name's parts with ", ", so `` `x, y` `` and
+    ``x.y`` both read as ``x.y``. ``parse_model_statement`` therefore
+    rejects a model name containing ", ": a ref to a model is always
+    exact, and only an external table so named reads as dotted.
     """
     refs: list[str] = []
     ctes: set[str] = set()

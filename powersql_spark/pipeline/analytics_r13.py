@@ -18,7 +18,12 @@ from pyspark.sql import functions as F
 
 from powersql_spark.operators.common import sql_jround
 from powersql_spark.pipeline.evalmetrics import _SCORE_SQL, _scored
-from powersql_spark.pipeline.graph import _STRONG_EDGES_CTE, _strong_edges
+from powersql_spark.pipeline.graph import (
+    _STRONG_EDGES_CTE,
+    _both_ways,
+    _degrees,
+    _strong_edges,
+)
 from powersql_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -349,22 +354,16 @@ def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the fact collapses through the broadcast-dimension
     edge build once; degrees and the rank window run over
     node-cardinality rows."""
-    und = _strong_edges(spark)
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("d"))
-    )
-    wr = Window.orderBy("d", "node")
+    deg = _degrees(_strong_edges(spark))
+    wr = Window.orderBy("deg", "node")
     wall = Window.partitionBy(F.lit(1))
     ranked = deg.select(
-        "d",
+        "deg",
         F.row_number().over(wr).alias("rk"),
         F.count("*").over(wall).alias("n"),
-        F.sum("d").over(wall).alias("sd"),
+        F.sum("deg").over(wall).alias("sd"),
     )
-    gini = 2.0 * F.sum(F.col("rk") * F.col("d")) / (
+    gini = 2.0 * F.sum(F.col("rk") * F.col("deg")) / (
         F.max("n") * F.max("sd").cast("double")
     ) - (F.max("n") + 1.0) / F.max("n")
     return (
@@ -748,11 +747,7 @@ def graph_avg_neighbor_degree(
     everything here joins the O(nations) degree table onto the
     O(nations^2) edge list — metadata-sized, broadcast both legs."""
     und = _strong_edges(spark)
-    sym = und.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionAll(
-        und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
+    sym = _both_ways(und, "src", "dst")
     deg = sym.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("bigint").alias("d")
     )

@@ -604,18 +604,30 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BOTH sides of all 4 band joins — materialize it once instead of
     # recomputing it 8x.
     sig = track_persist(sig.withColumn("sig", packed))
-    # ONE banded self-equi-join on (band index, chunk value) via
-    # posexplode — the _minhash_pairs structure — instead of 4
-    # per-chunk self-joins unioned: same candidate set (the union of
-    # per-chunk matches IS the set of pairs sharing any (band, value)),
-    # same dropDuplicates for multi-chunk colliders, but 2 scans of
-    # the persisted signatures and ~3 exchanges instead of 8 scans
-    # and 9 exchanges (4 join keys + union + distinct).
+    return _band_hamming_pairs(sig, n_chunks=4, max_dist=3)
+
+
+def _band_hamming_pairs(
+    sig: DataFrame, n_chunks: int, max_dist: int
+) -> DataFrame:
+    """Near-duplicate pairs ``(doc_a, doc_b, hamming)`` of 64-bit
+    signatures ``sig(doc_id, sig, chunk0..chunk<n_chunks-1>)``: every
+    pair within ``max_dist`` bits, found by banding (pigeonhole: a pair
+    within fewer bits than there are chunks shares a whole chunk).
+
+    ONE banded self-equi-join on (band index, chunk value) via
+    posexplode — the _minhash_pairs structure — instead of one
+    self-join per chunk unioned: same candidate set (the union of
+    per-chunk matches IS the set of pairs sharing any (band, value)),
+    dropDuplicates for multi-chunk colliders, but 2 scans of the
+    (persisted) signatures and ~3 exchanges instead of 8 scans and 9
+    exchanges at 4 chunks (4 join keys + union + distinct). Hamming
+    distance is one XOR + popcount per candidate."""
     bands = sig.select(
         "doc_id",
         "sig",
         F.posexplode(
-            F.array(*[F.col(f"chunk{i}") for i in range(4)])
+            F.array(*[F.col(f"chunk{i}") for i in range(n_chunks)])
         ).alias("band", "cv"),
     )
     a = bands.alias("a")
@@ -637,7 +649,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pairs.dropDuplicates(["doc_a", "doc_b"])
         .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .where(F.col("hamming") <= 3)
+        .where(F.col("hamming") <= max_dist)
     )
 
 

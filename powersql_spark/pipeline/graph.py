@@ -19,12 +19,143 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from powersql_spark.catalog import track_checkpoint
+from powersql_spark.catalog import track_checkpoint, track_persist
 from powersql_spark.operators.common import sql_jround
 from powersql_spark.registry import query
 
 _DAMPING = 0.85
 _N_ITER = 3
+
+
+# ---------------------------------------------------------------------------
+# Shared builders, one per graph idiom: the fact-sized trade-edge join tree
+# and its cross-border reductions, then the metadata-sized degree table,
+# symmetric adjacency and triangle join over an undirected edge frame.
+# ---------------------------------------------------------------------------
+
+
+def _trade_joins(spark: SparkSession) -> DataFrame:
+    """The trade graph's one fact-sized step: lineitem ⋈ orders ⋈
+    customer ⋈ supplier, with the two dimensions broadcast. Each row is
+    one lineitem's edge ``c_nationkey -> s_nationkey`` (customer nation
+    buys from supplier nation); callers add their own filter and
+    aggregation."""
+    li = spark.table("lineitem").select("l_orderkey", "l_suppkey")
+    o = spark.table("orders").select("o_orderkey", "o_custkey")
+    c = F.broadcast(
+        spark.table("customer").select("c_custkey", "c_nationkey")
+    )
+    s = F.broadcast(
+        spark.table("supplier").select("s_suppkey", "s_nationkey")
+    )
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+    )
+
+
+def _cross_border(spark: SparkSession) -> DataFrame:
+    """:func:`_trade_joins` without the self-loops (domestic trade)."""
+    return _trade_joins(spark).where(
+        F.col("c_nationkey") != F.col("s_nationkey")
+    )
+
+
+def _cross_border_pairs(spark: SparkSession) -> DataFrame:
+    """Distinct directed cross-border edges ``(src, dst)``."""
+    return (
+        _cross_border(spark)
+        .select(
+            F.col("c_nationkey").alias("src"),
+            F.col("s_nationkey").alias("dst"),
+        )
+        .distinct()
+    )
+
+
+def _cross_border_weights(spark: SparkSession) -> DataFrame:
+    """Directed cross-border edges ``(src, dst, w)``, w = lineitem
+    count."""
+    return (
+        _cross_border(spark)
+        .groupBy(
+            F.col("c_nationkey").alias("src"),
+            F.col("s_nationkey").alias("dst"),
+        )
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+
+
+def _above_mean_weight(spark: SparkSession) -> DataFrame:
+    """The directed weighted edges whose weight exceeds the mean edge
+    weight (the strong-trade graph before symmetrization). The mean is
+    a single-row broadcast, not a collect."""
+    raw = _cross_border_weights(spark)
+    thresh = raw.agg(F.avg(F.col("w").cast("double")).alias("t"))
+    return raw.join(F.broadcast(thresh)).where(
+        F.col("w").cast("double") > F.col("t")
+    )
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """``(node, deg)``: the undirected degree of every endpoint of the
+    edge frame ``und(a, b)``.
+
+    A key that already holds the symmetric adjacency counts its rows per
+    node instead, which keeps its plan: Spark serves a renaming of all of
+    the cached edges' columns from the cache as is, while this union's
+    one-column branches each need a Project."""
+    return (
+        und.select(F.col("a").alias("node"))
+        .unionAll(und.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("deg"))
+    )
+
+
+def _both_ways(und: DataFrame, x: str, y: str) -> DataFrame:
+    """The symmetric adjacency of ``und(a, b, ...)``: each edge once per
+    direction, as columns ``(x, y)`` followed by und's other columns
+    (an edge weight, say)."""
+    rest = [c for c in und.columns if c not in ("a", "b")]
+    return und.select(
+        F.col("a").alias(x), F.col("b").alias(y), *rest
+    ).unionAll(und.select(F.col("b").alias(x), F.col("a").alias(y), *rest))
+
+
+def _triangles(und: DataFrame) -> DataFrame:
+    """Every triangle ``(x, y, z)``, x < y < z, of the ``a < b`` edge
+    frame ``und`` exactly once: the canonical ordered 3-way EQUI-join —
+    the ordering kills the 6x double count and the join-explosion
+    symmetry."""
+    e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
+    return (
+        e1.join(e2, F.col("e2.a") == F.col("e1.b"))
+        .join(
+            e3,
+            (F.col("e3.a") == F.col("e1.a"))
+            & (F.col("e3.b") == F.col("e2.b")),
+        )
+        .select(
+            F.col("e1.a").alias("x"),
+            F.col("e1.b").alias("y"),
+            F.col("e2.b").alias("z"),
+        )
+    )
+
+
+def _node_triangles(und: DataFrame) -> DataFrame:
+    """``(node, n_tri)``: the number of triangles each node is in
+    (nodes in none are absent)."""
+    tri = _triangles(und)
+    return (
+        tri.select(F.col("x").alias("node"))
+        .unionAll(tri.select(F.col("y").alias("node")))
+        .unionAll(tri.select(F.col("z").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("n_tri"))
+    )
 
 
 @query(
@@ -96,18 +227,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence-loop variant is dedup_connected_components' shape).
     Rounded to 6dp: per-node inbound sums are ~25 doubles whose
     addition order differs between engines."""
-    li = spark.table("lineitem").select("l_orderkey", "l_suppkey")
-    o = spark.table("orders").select("o_orderkey", "o_custkey")
-    c = F.broadcast(
-        spark.table("customer").select("c_custkey", "c_nationkey")
-    )
-    s = F.broadcast(
-        spark.table("supplier").select("s_suppkey", "s_nationkey")
-    )
     edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
+        _trade_joins(spark)
         .groupBy(
             F.col("c_nationkey").alias("src"),
             F.col("s_nationkey").alias("dst"),
@@ -120,8 +241,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Dimension cardinality: metadata, not data (guarded for the
     # empty-input sweep — zero nodes means zero output rows anyway).
     n_nodes = nodes.count() or 1
-    from pyspark.sql import Window
-
     trans = edges.select(
         "src",
         "dst",
@@ -138,8 +257,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replanning). The transition matrix is O(nodes^2) — 625 rows
     # here, tiny at any corpus scale — so persist it: the edge build
     # runs once and the iteration joins read the cached rows.
-    from powersql_spark.catalog import track_persist
-
     trans = track_persist(trans)
     pr = nodes.select("node", F.lit(1.0 / n_nodes).alias("pr"))
     for _ in range(_N_ITER):
@@ -176,31 +293,8 @@ def _strong_edges(spark: SparkSession) -> DataFrame:
     join tree + one aggregation to O(nations^2) rows, persisted
     because every caller fans it into several join legs (same lesson
     as the pagerank transition matrix)."""
-    li = spark.table("lineitem").select("l_orderkey", "l_suppkey")
-    o = spark.table("orders").select("o_orderkey", "o_custkey")
-    c = F.broadcast(
-        spark.table("customer").select("c_custkey", "c_nationkey")
-    )
-    s = F.broadcast(
-        spark.table("supplier").select("s_suppkey", "s_nationkey")
-    )
-    raw = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .where(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    thresh = raw.agg(F.avg(F.col("w").cast("double")).alias("t"))
-    from powersql_spark.catalog import track_persist
-
     return track_persist(
-        raw.join(F.broadcast(thresh))
-        .where(F.col("w").cast("double") > F.col("t"))
+        _above_mean_weight(spark)
         .select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
@@ -262,27 +356,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     6x double-count AND the join-explosion symmetry, and on a
     thresholded dimension graph the edge table is metadata-sized. The
     mean-weight threshold is a single-row broadcast, not a collect."""
-    und = _strong_edges(spark)
-    e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e2.a") == F.col("e1.b"))
-        .join(
-            e3,
-            (F.col("e3.a") == F.col("e1.a"))
-            & (F.col("e3.b") == F.col("e2.b")),
-        )
-        .select(
-            F.col("e1.a").alias("x"),
-            F.col("e1.b").alias("y"),
-            F.col("e2.b").alias("z"),
-        )
-    )
-    member = (
-        tri.select(F.col("x").alias("node"))
-        .unionAll(tri.select(F.col("y").alias("node")))
-        .unionAll(tri.select(F.col("z").alias("node")))
-    )
-    per_node = member.groupBy("node").agg(F.count("*").alias("n_tri"))
+    per_node = _node_triangles(_strong_edges(spark))
     nodes = spark.table("nation").select(
         F.col("n_nationkey").alias("node")
     )
@@ -348,11 +422,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine accepts. Counts are integers; only the final ratio is
     floating, rounded to 6dp."""
     und = _strong_edges(spark)
-    adj = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).unionAll(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    )
+    adj = _both_ways(und, "node", "nbr")
     deg = adj.groupBy("node").agg(F.count("*").alias("d"))
     x, y = adj.alias("x"), F.broadcast(adj.alias("y"))
     common = (
@@ -460,46 +530,18 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax window. Fixed rounds keep it a single declarative plan the
     oracle mirrors CTE-for-CTE; ties (votes DESC, lbl ASC) are
     integer-deterministic."""
-    li = spark.table("lineitem").select("l_orderkey", "l_suppkey")
-    o = spark.table("orders").select("o_orderkey", "o_custkey")
-    c = F.broadcast(
-        spark.table("customer").select("c_custkey", "c_nationkey")
-    )
-    s = F.broadcast(
-        spark.table("supplier").select("s_suppkey", "s_nationkey")
-    )
-    raw = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .where(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    from powersql_spark.catalog import track_persist
-
     und = track_persist(
-        raw.groupBy(
+        _cross_border_weights(spark)
+        .groupBy(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
         ).agg(F.sum("w").alias("w"))
     )
-    adj = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr"), "w"
-    ).unionAll(
-        und.select(
-            F.col("b").alias("node"), F.col("a").alias("nbr"), "w"
-        )
-    )
+    adj = _both_ways(und, "node", "nbr")
     nodes = spark.table("nation").select(
         F.col("n_nationkey").alias("node")
     )
     labels = nodes.select("node", F.col("node").alias("lbl"))
-    from pyspark.sql import Window
-
     for _ in range(_LPA_ITER):
         votes = (
             adj.join(
@@ -617,10 +659,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     of rounds so it stays one declarative plan (same design stance as
     graph_pagerank's 3 iterations vs dedup_connected_components'
     convergence loop)."""
-    und = _strong_edges(spark)
-    sym = und.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionAll(und.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    sym = _both_ways(_strong_edges(spark), "src", "dst")
     dist = spark.range(1).select(
         F.lit(_BFS_SRC).cast("bigint").alias("node"),
         F.lit(0).alias("dist"),
@@ -703,14 +742,9 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlation collapses to six INTEGER power sums (exact — degrees
     are integers, so no decimal needed), rounded once."""
     und = _strong_edges(spark)
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    da = deg.select(F.col("node").alias("node_a"), F.col("d").alias("dx"))
-    db = deg.select(F.col("node").alias("node_b"), F.col("d").alias("dy"))
+    deg = _degrees(und)
+    da = deg.select(F.col("node").alias("node_a"), F.col("deg").alias("dx"))
+    db = deg.select(F.col("node").alias("node_b"), F.col("deg").alias("dy"))
     joined = und.join(
         F.broadcast(da), F.col("a") == F.col("node_a")
     ).join(F.broadcast(db), F.col("b") == F.col("node_b"))
@@ -790,8 +824,6 @@ def graph_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    from powersql_spark.catalog import track_persist
-
     pairs = track_persist(pairs)
     a = pairs.alias("a")
     b = pairs.alias("b")
@@ -868,8 +900,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= 25 nodes); on a real graph the edge table also shrinks
     monotonically so later rounds get cheaper, the classic peel
     behavior."""
-    und = _strong_edges(spark)
-
+    # Not _degrees: core_degree is an output column, and renaming
+    # _degrees' deg column would add a Project to the final plan.
     def survivors(edges: DataFrame) -> DataFrame:
         return (
             edges.select(F.col("a").alias("node"))
@@ -879,7 +911,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("core_degree") >= _KCORE_K)
         )
 
-    edges = und
+    edges = _strong_edges(spark)
     nodes = survivors(edges).coalesce(1).transform(track_checkpoint)
     for _ in range(2):  # unrolled peels (count is declared semantics)
         keep = F.broadcast(nodes.select("node"))
@@ -942,35 +974,10 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     on two integer columns. Ratios of small integers terminate in
     decimal, so the oracle replays Spark's shortest-repr rounding."""
     und = _strong_edges(spark)
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e2.a") == F.col("e1.b"))
-        .join(
-            e3,
-            (F.col("e3.a") == F.col("e1.a"))
-            & (F.col("e3.b") == F.col("e2.b")),
-        )
-        .select(
-            F.col("e1.a").alias("x"),
-            F.col("e1.b").alias("y"),
-            F.col("e2.b").alias("z"),
-        )
-    )
-    pertri = (
-        tri.select(F.col("x").alias("node"))
-        .unionAll(tri.select(F.col("y").alias("node")))
-        .unionAll(tri.select(F.col("z").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("t"))
-    )
-    t = F.coalesce(F.col("t"), F.lit(0))
-    d = F.col("d")
+    deg = _degrees(und)
+    pertri = _node_triangles(und)
+    t = F.coalesce(F.col("n_tri"), F.lit(0))
+    d = F.col("deg")
     cc = F.when(
         d >= 2, F.round(2.0 * t / (d * (d - 1)), 4)
     ).otherwise(F.lit(0.0))
@@ -1038,6 +1045,8 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     check is one anti-join against the edge list; the top-20 cut is
     TakeOrderedAndProject."""
     und = _strong_edges(spark)
+    # Not _both_ways: the unaliased (b, a) branch is a bare scan of the
+    # cached edges, where the aliased one adds a Project.
     sym = und.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionAll(und.select(F.col("b"), F.col("a")))
@@ -1115,14 +1124,9 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     back as a one-row broadcast and the CCDF is a running sum over
     the histogram (degree-distinct-sized window). Shares are ratios
     of integers, so the oracle replays shortest-repr rounding."""
-    und = _strong_edges(spark)
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    hist = deg.groupBy(F.col("d").alias("degree")).agg(
+    hist = _degrees(_strong_edges(spark)).groupBy(
+        F.col("deg").alias("degree")
+    ).agg(
         F.count("*").alias("n_nodes")
     )
     tot = hist.agg(F.sum("n_nodes").cast("double").alias("n"))
@@ -1255,33 +1259,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-iteration is one id-keyed join + one decimal aggregation on
     the metadata-sized edge list, and the normalizer is a one-row
     broadcast. No driver-side state."""
-    li = spark.table("lineitem").select("l_orderkey", "l_suppkey")
-    o = spark.table("orders").select("o_orderkey", "o_custkey")
-    c = F.broadcast(
-        spark.table("customer").select("c_custkey", "c_nationkey")
-    )
-    s = F.broadcast(
-        spark.table("supplier").select("s_suppkey", "s_nationkey")
-    )
-    raw = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .where(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    thresh = raw.agg(F.avg(F.col("w").cast("double")).alias("t"))
-    from powersql_spark.catalog import track_persist
-
-    de = track_persist(
-        raw.join(F.broadcast(thresh))
-        .where(F.col("w").cast("double") > F.col("t"))
-        .select("src", "dst")
-    )
+    de = track_persist(_above_mean_weight(spark).select("src", "dst"))
     nodes = spark.table("nation").select(
         F.col("n_nationkey").alias("node")
     )
@@ -1446,6 +1424,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     label-keyed; every quantity stays an INTEGER until the one final
     rounded ratio, so the oracle replays the score exactly."""
     und = _strong_edges(spark)
+    # Not _both_ways: see graph_adamic_adar.
     sym = und.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionAll(und.select(F.col("b"), F.col("a")))
@@ -1577,27 +1556,13 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge table + a grouped sum. 6dp rounding absorbs cross-engine
     inbound-sum ordering; ranking ties break on node id."""
     edges = (
-        spark.table("lineitem")
-        .join(
-            spark.table("orders"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            spark.table("customer"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            spark.table("supplier"),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
+        _trade_joins(spark)
         .groupBy(
             F.col("c_nationkey").alias("src"),
             F.col("s_nationkey").alias("dst"),
         )
         .agg(F.count("*").alias("cnt"))
     )
-    from powersql_spark.catalog import track_persist
-
     bedges = (
         edges.where(F.col("src") != F.col("dst"))
         .select("src", "dst", F.lit(1).alias("w"))
@@ -1689,29 +1654,7 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reciprocity probe is an equi-join of the O(nodes^2) edge
     table against its own transpose — metadata-sized for any real
     dimension graph — and the rollup is a per-source count."""
-    from powersql_spark.catalog import track_persist
-
-    edges = track_persist(
-        spark.table("lineitem")
-        .join(
-            spark.table("orders"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            spark.table("customer"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            spark.table("supplier"),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .where(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .distinct()
-    )
+    edges = track_persist(_cross_border_pairs(spark))
     e, r = edges.alias("e"), edges.alias("r")
     marked = e.join(
         r,
@@ -1810,27 +1753,7 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations. On a billion-node graph you'd swap the squaring for
     partitioned min-label rounds; at dimension-graph size the exact
     closure is the honest, cheapest plan."""
-    li = spark.table("lineitem").select("l_orderkey", "l_suppkey")
-    o = spark.table("orders").select("o_orderkey", "o_custkey")
-    c = F.broadcast(
-        spark.table("customer").select("c_custkey", "c_nationkey")
-    )
-    s = F.broadcast(
-        spark.table("supplier").select("s_suppkey", "s_nationkey")
-    )
-    from powersql_spark.catalog import track_persist
-
-    r = track_persist(
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .where(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .distinct()
-    )
+    r = track_persist(_cross_border_pairs(spark))
     # The closure only ever GROWS (unionAll + distinct over a superset),
     # so an unchanged row count after a squaring is a fixpoint: every
     # remaining round would pay an eager checkpoint job to rebuild an
@@ -1979,26 +1902,7 @@ def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round localCheckpoint cutting the re-expanding lineage exactly
     like graph_scc. Per-pair contributions are 10dp-decimal-pinned, so
     the centrality is engine- and partition-order-exact."""
-    li = spark.table("lineitem").select("l_orderkey", "l_suppkey")
-    o = spark.table("orders").select("o_orderkey", "o_custkey")
-    c = F.broadcast(
-        spark.table("customer").select("c_custkey", "c_nationkey")
-    )
-    s = F.broadcast(
-        spark.table("supplier").select("s_suppkey", "s_nationkey")
-    )
-    raw = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .where(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .distinct()
-    )
-    und = raw.select(
+    und = _cross_border_pairs(spark).select(
         F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
     ).distinct()
     nodes = spark.table("nation").select(F.col("n_nationkey").alias("node"))
@@ -2011,8 +1915,7 @@ def _brandes_unrolled(und: DataFrame, nodes: DataFrame) -> DataFrame:
     graph_betweenness so the diameter guard is testable on synthetic
     graphs (a path graph longer than _BFS_ROUNDS+1 must raise)."""
     adj = (
-        und.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .unionAll(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
+        _both_ways(und, "node", "nbr")
         .coalesce(1)
         .transform(track_checkpoint)
     )
@@ -2202,14 +2105,8 @@ def _apsp_dist(spark: SparkSession) -> DataFrame:
     distance, else the diameter exceeded the unroll and the
     centralities would silently truncate (the Brandes guard applied
     to the multi-source case)."""
-    und = _strong_edges(spark)
     sym = (
-        und.select(F.col("a").alias("src_n"), F.col("b").alias("dst"))
-        .unionAll(
-            und.select(
-                F.col("b").alias("src_n"), F.col("a").alias("dst")
-            )
-        )
+        _both_ways(_strong_edges(spark), "src_n", "dst")
         .coalesce(1)
         .transform(track_checkpoint)
     )
@@ -2466,12 +2363,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same constant-sized tables over a 12-row k spine — no
     fact-sized work beyond the shared edge build."""
     und = _strong_edges(spark)
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("deg"))
-    )
+    deg = _degrees(und)
     ks = spark.range(1, 13).select(F.col("id").alias("k"))
     edge_deg = und.join(
         F.broadcast(deg.withColumnRenamed("node", "a_n")),
@@ -2627,23 +2519,8 @@ def graph_transitivity_global(
     the O(nations^2) edge table; output is one row of integers plus
     one ratio."""
     und = _strong_edges(spark)
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("deg"))
-    )
-    e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e2.a") == F.col("e1.b"))
-        .join(
-            e3,
-            (F.col("e3.a") == F.col("e1.a"))
-            & (F.col("e3.b") == F.col("e2.b")),
-        )
-        .agg(F.count("*").cast("bigint").alias("n_tri"))
-    )
-    wedge = deg.agg(
+    tri = _triangles(und).agg(F.count("*").cast("bigint").alias("n_tri"))
+    wedge = _degrees(und).agg(
         F.sum(F.col("deg") * (F.col("deg") - 1) / 2)
         .cast("bigint")
         .alias("n_wedges")
@@ -2714,11 +2591,7 @@ def graph_local_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one shared edge build; the common-neighbor count is
     an (edge x neighbor) equi-join on the O(nations^2) tables."""
     und = _strong_edges(spark)
-    sym = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).unionAll(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    )
+    sym = _both_ways(und, "node", "nbr")
     deg = sym.groupBy("node").agg(
         F.count("*").cast("bigint").alias("deg")
     )
@@ -2820,11 +2693,7 @@ def graph_link_prediction(
     scale the candidate set is bounded by the entity graph, never by
     fact rows."""
     und = _strong_edges(spark)
-    sym = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).unionAll(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    )
+    sym = _both_ways(und, "node", "nbr")
     deg = sym.groupBy("node").agg(
         F.count("*").cast("bigint").alias("deg")
     )
@@ -2953,12 +2822,7 @@ def graph_small_world(spark: SparkSession, sf_dir: str) -> DataFrame:
     is arithmetic over the checkpointed APSP state and O(nations)
     degree rows — five 1-row frames broadcast together."""
     und = _strong_edges(spark)
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("deg"))
-    )
+    deg = _degrees(und)
     base = deg.agg(
         F.count("*").cast("bigint").alias("n_active")
     ).crossJoin(
@@ -2966,16 +2830,7 @@ def graph_small_world(spark: SparkSession, sf_dir: str) -> DataFrame:
             und.agg(F.count("*").cast("bigint").alias("n_edges"))
         )
     )
-    e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e2.a") == F.col("e1.b"))
-        .join(
-            e3,
-            (F.col("e3.a") == F.col("e1.a"))
-            & (F.col("e3.b") == F.col("e2.b")),
-        )
-        .agg(F.count("*").cast("bigint").alias("n_tri"))
-    )
+    tri = _triangles(und).agg(F.count("*").cast("bigint").alias("n_tri"))
     wedge = deg.agg(
         F.sum(F.col("deg") * (F.col("deg") - 1) / 2)
         .cast("bigint")

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from powersql_spark.operators.common import sql_jround
+from powersql_spark.pipeline.dedup import _band_hamming_pairs
 from powersql_spark.registry import query
 
 _META_SCHEMA = (
@@ -322,7 +323,7 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     only Python stage — exactly where a real codec must sit anyway);
     everything after shuffles (doc_id, 4 shorts, 1 long) per row,
     never payload bytes. Same sub-quadratic candidate structure as
-    dedup_simhash (pipeline/dedup.py:301).
+    dedup_simhash (both call dedup._band_hamming_pairs).
 
     Oracle (round 3): the block-hash surrogate IS SQL-expressible —
     block means share the denominator, so the mean compare is an
@@ -344,41 +345,7 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(_PHASH_CHUNKS)
     ]
     sig = track_persist(sig.select("doc_id", "sig", *chunks))
-    # ONE banded self-equi-join on (band index, chunk value) via
-    # posexplode — the _minhash_pairs structure — instead of 4
-    # per-chunk self-joins unioned: same candidate set (the union of
-    # per-chunk matches IS the set of pairs sharing any (band, value)),
-    # same dropDuplicates for multi-chunk colliders, but 2 scans of
-    # the persisted signatures and ~3 exchanges instead of 8 scans
-    # and 9 exchanges (4 join keys + union + distinct).
-    bands = sig.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.array(*[F.col(f"chunk{i}") for i in range(_PHASH_CHUNKS)])
-        ).alias("band", "cv"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.cv") == F.col("b.cv"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("a.sig").alias("sig_a"),
-        F.col("b.sig").alias("sig_b"),
-    )
-    hamming = F.bit_count(
-        F.col("sig_a").bitwiseXOR(F.col("sig_b"))
-    ).cast("int")
-    return (
-        pairs.dropDuplicates(["doc_a", "doc_b"])
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .where(F.col("hamming") <= _PHASH_MAX_DIST)
-    )
+    return _band_hamming_pairs(sig, _PHASH_CHUNKS, _PHASH_MAX_DIST)
 
 
 _SHARD_TARGET = 4096  # bytes per shard (WebDataset-style)

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from powersql_spark.pipeline.text import _tokens
 from powersql_spark.registry import query
 
 # BM25 constants (Robertson k1/b defaults) — written as the same
@@ -24,10 +25,6 @@ _BM25_TERMS = ("spark", "vector", "hash")
 _TERMS_SQL = ", ".join(f"'{t}'" for t in _BM25_TERMS)
 _RRF_K = 60
 _RRF_POOL = 50
-
-
-def _tokens(col: str = "text"):
-    return F.split(F.trim(F.col(col)), r"\s+")
 
 
 # Shared BM25 per-(doc,term) weight template. Placeholders: tf, df,

@@ -36,9 +36,8 @@ def _max_partition_bytes(master: str | None) -> str:
     megabytes, so 128 MB would map an entire table to ONE scan task and
     serialize scan + partial aggregation onto a single core; 4 MB keeps a
     file-per-task once bench.py lays tables out as multi-file parquet
-    (openCostInBytes' 4 MB padding then closes each bin after one file)."""
-    if os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES"):
-        return os.environ["SPARK_GRAFT_MAX_PARTITION_BYTES"]
+    (openCostInBytes' 4 MB padding then closes each bin after one file).
+    ``build_session(extra_conf=...)`` overrides it, as any conf."""
     is_local = master is None or master.startswith("local")
     return "4m" if is_local else "134217728"
 
@@ -85,9 +84,8 @@ def _page_size(master: str | None) -> str | None:
     measured ~20-30% off the same 32-task aggregate stage. Local mode
     only: on a cluster the computed default is sized for multi-GB
     per-task state and smaller pages would add page-switching to big
-    aggregations. Override with SPARK_GRAFT_PAGE_SIZE."""
-    if os.environ.get("SPARK_GRAFT_PAGE_SIZE"):
-        return os.environ["SPARK_GRAFT_PAGE_SIZE"]
+    aggregations. ``build_session(extra_conf=...)`` overrides it, as
+    any conf."""
     is_local = master is None or master.startswith("local")
     return "4m" if is_local else None
 

@@ -157,6 +157,18 @@ def test_refs_extract_not_a_table(parser):
     assert refs == ["base"]
 
 
+def test_model_name_with_comma_space_is_rejected(parser):
+    """The plan JSON prints `x, y` and x.y alike, so a model named
+    `x, y` would lose the DAG edge from every model that reads it:
+    refuse the name, naming the model, instead of misordering the run."""
+    assert extract_refs(parser, "SELECT * FROM `x, y`") == ["x.y"]
+    with pytest.raises(ValueError, match=r"'x, y'"):
+        parse_model_statement("CREATE TABLE `x, y` AS SELECT 1 AS c")
+    with pytest.raises(ValueError, match=r"'a, b'"):
+        parse_model_file('CREATE VIEW "a, b" AS SELECT 1 AS c')
+    assert parse_model_statement("CREATE VIEW `x,y` AS SELECT 1").name == "x,y"
+
+
 def test_refs_dotted_and_quoted(spark, parser):
     """The session's grammar decides what "..." is: a string literal by
     default, so it cannot name a table (running the model fails the
