@@ -17,12 +17,16 @@ from pyspark.sql import functions as F
 
 from powersql_spark.operators.common import (
     DEC,
+    ab_arm,
+    arm_moments,
+    arm_power_sums,
     davg,
     dsum,
     sql_davg,
     sql_dsum,
     sql_jround,
     welch_satterthwaite_df,
+    welch_t,
 )
 from powersql_spark.catalog import values_df
 from powersql_spark.registry import query
@@ -1311,30 +1315,8 @@ def abtest_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole readout is constant-size state however many events exist —
     no per-variant scan, no join."""
     e = spark.table("events")
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(F.col("user_id").cast("string"), F.lit(":ab"))
-                .cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
-    v = F.col("value")
-    dec = lambda c: c.cast("decimal(28,6)")  # noqa: E731
-    s = e.select(is_a.alias("is_a"), v.alias("value")).agg(
-        F.count(F.when(F.col("is_a"), 1)).alias("n_a"),
-        F.count(F.when(~F.col("is_a"), 1)).alias("n_b"),
-        F.sum(F.when(F.col("is_a"), dec(v))).cast("double").alias("s_a"),
-        F.sum(F.when(~F.col("is_a"), dec(v))).cast("double").alias("s_b"),
-        F.sum(F.when(F.col("is_a"), dec(v * v)))
-        .cast("double")
-        .alias("q_a"),
-        F.sum(F.when(~F.col("is_a"), dec(v * v)))
-        .cast("double")
-        .alias("q_b"),
+    s = e.select(ab_arm(":ab").alias("is_a"), "value").agg(
+        *arm_power_sums()
     )
     m_a, m_b = F.col("s_a") / F.col("n_a"), F.col("s_b") / F.col("n_b")
     var_a = F.col("q_a") / F.col("n_a") - m_a * m_a
@@ -2472,65 +2454,16 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbers of conditional decimal power-sum state — constant memory
     per group, bit-identical across engines and partitionings; the
     statistic and df are post-aggregation arithmetic on those six
-    numbers. The same salted-hash assignment pattern as abtest_zscore,
-    independent salt."""
+    numbers."""
     e = spark.table("events").where(F.col("value").isNotNull())
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":welch")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
-    dec = "decimal(28,6)"
     s = (
-        e.select("event_type", "value", is_a.alias("is_a"))
+        e.select("event_type", "value", ab_arm(":welch").alias("is_a"))
         .groupBy("event_type")
-        .agg(
-            F.count(F.when(F.col("is_a"), 1)).alias("n_a"),
-            F.count(F.when(~F.col("is_a"), 1)).alias("n_b"),
-            F.sum(F.when(F.col("is_a"), F.col("value").cast(dec)))
-            .cast("double")
-            .alias("s_a"),
-            F.sum(F.when(~F.col("is_a"), F.col("value").cast(dec)))
-            .cast("double")
-            .alias("s_b"),
-            F.sum(
-                F.when(
-                    F.col("is_a"),
-                    (F.col("value") * F.col("value")).cast(dec),
-                )
-            )
-            .cast("double")
-            .alias("q_a"),
-            F.sum(
-                F.when(
-                    ~F.col("is_a"),
-                    (F.col("value") * F.col("value")).cast(dec),
-                )
-            )
-            .cast("double")
-            .alias("q_b"),
-        )
+        .agg(*arm_power_sums())
     )
-    mean_a = F.col("s_a") / F.col("n_a")
-    mean_b = F.col("s_b") / F.col("n_b")
-    var_a = (
-        F.col("q_a") - F.col("s_a") * F.col("s_a") / F.col("n_a")
-    ) / (F.col("n_a") - 1)
-    var_b = (
-        F.col("q_b") - F.col("s_b") * F.col("s_b") / F.col("n_b")
-    ) / (F.col("n_b") - 1)
-    se2 = var_a / F.col("n_a") + var_b / F.col("n_b")
-    t = (mean_b - mean_a) / F.sqrt(se2)
-    df = welch_satterthwaite_df(
-        var_a, var_b, F.col("n_a"), F.col("n_b")
-    )
+    mean_a, mean_b, _, _ = arm_moments()
+    t = welch_t()
+    df = welch_satterthwaite_df()
     return s.select(
         "event_type",
         "n_a",

@@ -19,9 +19,19 @@ from pyspark.sql import functions as F
 
 from powersql_spark.operators.analytics import _W_DF as _EXP_WELCH_DF
 from powersql_spark.operators.common import (
+    POWER_DEC,
+    ab_arm,
+    arm_conversions,
+    arm_counts,
+    arm_moments,
+    arm_power_sums,
+    converted_flag,
     dsum,
+    pooled_var,
     sql_jround,
     welch_satterthwaite_df,
+    welch_se2,
+    welch_t,
 )
 from powersql_spark.catalog import values_df
 from powersql_spark.registry import query
@@ -105,20 +115,8 @@ def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND partition counts; one shuffle for the group-by, one bounded
     window on its own partitioning."""
     e = spark.table("events").where(F.col("value").isNotNull())
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(F.col("user_id").cast("string"), F.lit(":mwu")).cast(
-                    "binary"
-                )
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
     vals = (
-        e.select("event_type", "value", is_a.alias("is_a"))
+        e.select("event_type", "value", ab_arm(":mwu").alias("is_a"))
         .groupBy("event_type", "value")
         .agg(
             F.count("*").alias("cnt"),
@@ -548,6 +546,32 @@ _PROP_COUNT_OK = (
 )
 
 
+def _prop_pool():
+    """Spark twin of _PROP_P: the pooled conversion rate of both arms."""
+    return (F.col("conv_a") + F.col("conv_b")).cast("double") / (
+        F.col("n_a") + F.col("n_b")
+    )
+
+
+def _prop_z():
+    """Spark twin of _PROP_Z, rounded to 4dp inside the same
+    degenerate-pool guard (NULL at 0% or 100% pooled conversion)."""
+    n_a, n_b = F.col("n_a"), F.col("n_b")
+    conv = F.col("conv_a") + F.col("conv_b")
+    p_a = F.col("conv_a").cast("double") / n_a
+    p_b = F.col("conv_b").cast("double") / n_b
+    pool = _prop_pool()
+    degenerate = (conv <= 0) | (conv >= n_a + n_b)
+    return F.when(
+        ~degenerate,
+        F.round(
+            (p_b - p_a)
+            / F.sqrt(pool * (1 - pool) * (1.0 / n_a + 1.0 / n_b)),
+            4,
+        ),
+    )
+
+
 def _prop_count_ok():
     """Spark twin of _PROP_COUNT_OK over the same four count columns."""
     return (
@@ -613,59 +637,14 @@ def stats_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer rationals; only z rounds (sql_jround — terminating
     rationals can land on half boundaries)."""
     per_user = spark.table("events").groupBy("user_id").agg(
-        F.when(
-            5
-            * F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            )
-            > F.count("*"),
-            1,
-        )
-        .otherwise(0)
-        .alias("converted")
+        converted_flag()
     )
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":prop")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
-    s = per_user.select(is_a.alias("is_a"), "converted").agg(
-        F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("n_a"),
-        F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("n_b"),
-        F.sum(F.when(F.col("is_a"), F.col("converted")).otherwise(0))
-        .cast("bigint")
-        .alias("conv_a"),
-        F.sum(F.when(~F.col("is_a"), F.col("converted")).otherwise(0))
-        .cast("bigint")
-        .alias("conv_b"),
+    s = per_user.select(ab_arm(":prop").alias("is_a"), "converted").agg(
+        *arm_conversions()
     )
     p_a = F.col("conv_a").cast("double") / F.col("n_a")
     p_b = F.col("conv_b").cast("double") / F.col("n_b")
-    pool = (F.col("conv_a") + F.col("conv_b")).cast("double") / (
-        F.col("n_a") + F.col("n_b")
-    )
-    degenerate = (F.col("conv_a") + F.col("conv_b") <= 0) | (
-        F.col("conv_a") + F.col("conv_b") >= F.col("n_a") + F.col("n_b")
-    )
-    z = F.when(
-        ~degenerate,
-        F.round(
-            (p_b - p_a)
-            / F.sqrt(
-                pool
-                * (1 - pool)
-                * (1.0 / F.col("n_a") + 1.0 / F.col("n_b"))
-            ),
-            4,
-        ),
-    )
+    z = _prop_z()
     return s.select(
         "n_a",
         "n_b",
@@ -776,25 +755,13 @@ def stats_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0),
         ).alias("y"),
     )
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":cuped")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
     from powersql_spark.catalog import track_persist
 
     # Persisted: the moment pass and the adjustment pass both consume
     # the USER aggregate — without the persist, Catalyst recomputes
     # the subtree and the corpus is scanned twice.
     per_user = track_persist(
-        per_user.select("user_id", is_a.alias("is_a"), "x", "y")
+        per_user.select("user_id", ab_arm(":cuped").alias("is_a"), "x", "y")
     )
     mom = per_user.agg(
         F.count("*").alias("n"),
@@ -1006,6 +973,32 @@ _SRM_CHI2 = (
 _SRM_COUNT_OK = "(n_a + n_b >= 10)"
 
 
+def _srm_counts(spark: SparkSession, users: DataFrame, salts) -> DataFrame:
+    """``n_a``/``n_b`` per salt: every user assigned under each of
+    ``salts`` (a broadcast constant dimension)."""
+    salt_df = values_df(spark, [(s,) for s in salts], ["salt"])
+    return (
+        users.crossJoin(F.broadcast(salt_df))
+        .select("salt", ab_arm(F.col("salt")).alias("is_a"))
+        .groupBy("salt")
+        .agg(*arm_counts())
+    )
+
+
+def _srm_chi2():
+    """Spark twin of _SRM_CHI2 over the n_a/n_b columns (unrounded)."""
+    n_a, n_b = F.col("n_a"), F.col("n_b")
+    e_half = (n_a + n_b) / 2.0
+    return (
+        (n_a - e_half) * (n_a - e_half) + (n_b - e_half) * (n_b - e_half)
+    ) / e_half
+
+
+def _srm_count_ok():
+    """Spark twin of _SRM_COUNT_OK over the same two count columns."""
+    return F.col("n_a") + F.col("n_b") >= 10
+
+
 @query(
     "stats_srm_check",
     oracle=f"""
@@ -1051,50 +1044,15 @@ def stats_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to two integers per salt. Chi-square on half-integer exact
     arithmetic; sql_jround because the statistic is a terminating
     rational."""
-    users = (
-        spark.table("events").select("user_id").distinct()
-    )
-    salts = values_df(
-        spark, [(s,) for s in (":welch", ":mwu", ":prop", ":cuped")], ["salt"]
-    )
-    assigned = users.crossJoin(F.broadcast(salts)).select(
-        "salt",
-        (
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("user_id").cast("string"), F.col("salt")
-                    ).cast("binary")
-                ),
-                1,
-                1,
-            )
-            < "8"
-        ).alias("is_a"),
-    )
-    cnt = assigned.groupBy("salt").agg(
-        F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("n_a"),
-        F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("n_b"),
-    )
-    e_half = (F.col("n_a") + F.col("n_b")) / 2.0
-    chi2 = F.round(
-        (
-            (F.col("n_a") - e_half) * (F.col("n_a") - e_half)
-            + (F.col("n_b") - e_half) * (F.col("n_b") - e_half)
-        )
-        / e_half,
-        6,
-    )
+    users = spark.table("events").select("user_id").distinct()
+    cnt = _srm_counts(spark, users, (":welch", ":mwu", ":prop", ":cuped"))
+    chi2 = F.round(_srm_chi2(), 6)
     return cnt.select(
         "salt",
         "n_a",
         "n_b",
         chi2.alias("chi2"),
-        # Verdict withheld below 10 assigned users (expected cell
-        # count < 5 — _SRM_COUNT_OK, VERDICT r8 count tranche).
-        F.when(
-            F.col("n_a") + F.col("n_b") >= 10, chi2 > 3.841
-        ).alias("srm_detected"),
+        F.when(_srm_count_ok(), chi2 > 3.841).alias("srm_detected"),
     ).orderBy("salt")
 
 
@@ -1162,6 +1120,13 @@ _PW_MDE = (
 )
 
 
+def _pw_mde(p_pool, n_min):
+    """Spark twin of _PW_MDE for the given pooled rate and arm size."""
+    return F.lit(1.959964 + 0.841621) * F.sqrt(
+        2.0 * p_pool * (1 - p_pool) / n_min
+    )
+
+
 @query(
     "stats_power_analysis",
     oracle=f"""
@@ -1213,40 +1178,15 @@ def stats_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     constants are literals on both engines (no inverse-normal
     function needed)."""
     per_user = spark.table("events").groupBy("user_id").agg(
-        F.when(
-            5
-            * F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            )
-            > F.count("*"),
-            1,
-        )
-        .otherwise(0)
-        .alias("converted")
+        converted_flag()
     )
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":prop")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
-    s = per_user.select(is_a.alias("is_a"), "converted").agg(
-        F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("n_a"),
-        F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("n_b"),
+    s = per_user.select(ab_arm(":prop").alias("is_a"), "converted").agg(
+        *arm_counts(),
         F.sum("converted").cast("bigint").alias("conv"),
         F.count("*").alias("n_users"),
     )
     p_pool = F.col("conv").cast("double") / F.col("n_users")
-    n_min = F.least("n_a", "n_b")
-    mde = F.lit(1.959964 + 0.841621) * F.sqrt(
-        2.0 * p_pool * (1 - p_pool) / n_min
-    )
+    mde = _pw_mde(p_pool, F.least("n_a", "n_b"))
     return s.select(
         "n_a",
         "n_b",
@@ -1346,17 +1286,9 @@ def _welch_t_guarded_sql(rounded_t: str) -> str:
 
 
 def _welch_t_guarded_col(t):  # Column -> Column, mirrors the SQL CASE
-    se2 = (
-        (F.col("q_a") - F.col("s_a") * F.col("s_a") / F.col("n_a"))
-        / (F.col("n_a") - 1)
-        / F.col("n_a")
-        + (F.col("q_b") - F.col("s_b") * F.col("s_b") / F.col("n_b"))
-        / (F.col("n_b") - 1)
-        / F.col("n_b")
-    )
     return F.when(
         (F.col("n_a") >= 2) & (F.col("n_b") >= 2),
-        F.when(se2 > 0, t),
+        F.when(welch_se2() > 0, t),
     )
 
 
@@ -1485,131 +1417,37 @@ def pipeline_experiment_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = spark.table("events")
 
-    def assign(salt: str):
-        return (
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("user_id").cast("string"), F.lit(salt)
-                    ).cast("binary")
-                ),
-                1,
-                1,
-            )
-            < "8"
-        )
-
     # Per-user conversion bits, computed FIRST because the user-grain
     # collapse doubles as the distinct-user set: the SRM branch and the
     # proportion branch both read this one persisted user-grain frame
     # instead of each re-scanning and re-shuffling the event stream
     # (was: a separate users.distinct() scan+shuffle with identical
     # keys to this groupBy).
-    per_user = track_persist(
-        e.groupBy("user_id").agg(
-            F.when(
-                5
-                * F.sum(
-                    F.when(
-                        F.col("event_type") == "purchase", 1
-                    ).otherwise(0)
-                )
-                > F.count("*"),
-                1,
-            )
-            .otherwise(0)
-            .alias("converted")
-        )
-    )
+    per_user = track_persist(e.groupBy("user_id").agg(converted_flag()))
     # SRM over both salts
-    users = per_user.select("user_id")
-    salts = values_df(
-        spark, [(s,) for s in (":welch", ":prop")], ["salt"]
-    )
-    sa = users.crossJoin(F.broadcast(salts)).select(
-        "salt",
-        (
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("user_id").cast("string"), F.col("salt")
-                    ).cast("binary")
-                ),
-                1,
-                1,
-            )
-            < "8"
-        ).alias("is_a"),
-    )
-    cnt = sa.groupBy("salt").agg(
-        F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("n_a"),
-        F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("n_b"),
-    )
-    e_half = (F.col("n_a") + F.col("n_b")) / 2.0
-    chi2 = F.round(
-        (
-            (F.col("n_a") - e_half) * (F.col("n_a") - e_half)
-            + (F.col("n_b") - e_half) * (F.col("n_b") - e_half)
-        )
-        / e_half,
-        4,
-    )
+    cnt = _srm_counts(spark, per_user.select("user_id"), (":welch", ":prop"))
+    chi2 = F.round(_srm_chi2(), 4)
     srm = cnt.select(
         F.lit("srm").alias("check_name"),
         F.col("salt").alias("scope"),
         chi2.alias("statistic"),
-        # Same count-validity guard as stats_srm_check
-        # (_SRM_COUNT_OK): the composite and the component must
-        # never disagree at any n (VERDICT r8 count tranche).
-        F.when(
-            F.col("n_a") + F.col("n_b") >= 10, chi2 > 3.841
-        ).alias("flagged"),
+        # Same count-validity guard as stats_srm_check: the composite
+        # and the component must never disagree at any n (VERDICT r8
+        # count tranche).
+        F.when(_srm_count_ok(), chi2 > 3.841).alias("flagged"),
     )
     # Welch per event_type
-    dec = "decimal(28,6)"
     ev = e.where(F.col("value").isNotNull()).select(
-        "event_type", "value", assign(":welch").alias("is_a")
+        "event_type", "value", ab_arm(":welch").alias("is_a")
     )
-    ws = ev.groupBy("event_type").agg(
-        F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("n_a"),
-        F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("n_b"),
-        F.sum(F.when(F.col("is_a"), F.col("value").cast(dec)))
-        .cast("double")
-        .alias("s_a"),
-        F.sum(F.when(~F.col("is_a"), F.col("value").cast(dec)))
-        .cast("double")
-        .alias("s_b"),
-        F.sum(
-            F.when(F.col("is_a"), (F.col("value") * F.col("value")).cast(dec))
-        )
-        .cast("double")
-        .alias("q_a"),
-        F.sum(
-            F.when(
-                ~F.col("is_a"), (F.col("value") * F.col("value")).cast(dec)
-            )
-        )
-        .cast("double")
-        .alias("q_b"),
-    )
-    mean_a = F.col("s_a") / F.col("n_a")
-    mean_b = F.col("s_b") / F.col("n_b")
-    var_a = (
-        F.col("q_a") - F.col("s_a") * F.col("s_a") / F.col("n_a")
-    ) / (F.col("n_a") - 1)
-    var_b = (
-        F.col("q_b") - F.col("s_b") * F.col("s_b") / F.col("n_b")
-    ) / (F.col("n_b") - 1)
-    se2_w = var_a / F.col("n_a") + var_b / F.col("n_b")
-    t = F.round((mean_b - mean_a) / F.sqrt(se2_w), 4)
+    ws = ev.groupBy("event_type").agg(*arm_power_sums())
+    t = F.round(welch_t(), 4)
     # Same small-df verdict guard as stats_welch_ttest (VERDICT r7
     # ask #5): the composite and the component share the df formula
     # on BOTH engine sides (the SQL oracle imports _W_DF; this side
     # calls the common welch_satterthwaite_df helper — ADVICE r8) so
     # their flagged columns can never disagree at ANY n.
-    df_w = welch_satterthwaite_df(
-        var_a, var_b, F.col("n_a"), F.col("n_b")
-    )
+    df_w = welch_satterthwaite_df()
     welch = ws.select(
         F.lit("welch_t").alias("check_name"),
         F.col("event_type").alias("scope"),
@@ -1619,36 +1457,10 @@ def pipeline_experiment_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # Proportion z + power on conversion (per_user persisted above)
-    ps = per_user.select(assign(":prop").alias("is_a"), "converted").agg(
-        F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("n_a"),
-        F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("n_b"),
-        F.sum(F.when(F.col("is_a"), F.col("converted")).otherwise(0))
-        .cast("bigint")
-        .alias("conv_a"),
-        F.sum(F.when(~F.col("is_a"), F.col("converted")).otherwise(0))
-        .cast("bigint")
-        .alias("conv_b"),
+    ps = per_user.select(ab_arm(":prop").alias("is_a"), "converted").agg(
+        *arm_conversions()
     )
-    p_a = F.col("conv_a").cast("double") / F.col("n_a")
-    p_b = F.col("conv_b").cast("double") / F.col("n_b")
-    pool = (F.col("conv_a") + F.col("conv_b")).cast("double") / (
-        F.col("n_a") + F.col("n_b")
-    )
-    degenerate = (F.col("conv_a") + F.col("conv_b") <= 0) | (
-        F.col("conv_a") + F.col("conv_b") >= F.col("n_a") + F.col("n_b")
-    )
-    z = F.when(
-        ~degenerate,
-        F.round(
-            (p_b - p_a)
-            / F.sqrt(
-                pool
-                * (1 - pool)
-                * (1.0 / F.col("n_a") + 1.0 / F.col("n_b"))
-            ),
-            4,
-        ),
-    )
+    z = _prop_z()
     ps = ps.where((F.col("n_a") > 0) & (F.col("n_b") > 0))
     prop = ps.select(
         F.lit("proportion_z").alias("check_name"),
@@ -1659,9 +1471,7 @@ def pipeline_experiment_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         # non-degenerate pool, so z is never NULL when reported.
         F.when(_prop_count_ok(), F.abs(z) > 1.96).alias("flagged"),
     )
-    mde = F.lit(1.959964 + 0.841621) * F.sqrt(
-        2.0 * pool * (1 - pool) / F.least("n_a", "n_b")
-    )
+    mde = _pw_mde(_prop_pool(), F.least("n_a", "n_b"))
     power = ps.select(
         F.lit("power_mde").alias("check_name"),
         F.lit("conversion").alias("scope"),
@@ -1853,64 +1663,12 @@ def stats_bh_correction(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats_welch_ttest; ranking, the critical-value join (5x5), and
     the cutoff scalar all run on the five-row test table."""
     e = spark.table("events").where(F.col("value").isNotNull())
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":welch")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
-    dec = "decimal(28,6)"
     ws = (
-        e.select("event_type", "value", is_a.alias("is_a"))
+        e.select("event_type", "value", ab_arm(":welch").alias("is_a"))
         .groupBy("event_type")
-        .agg(
-            F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("n_a"),
-            F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("n_b"),
-            F.sum(F.when(F.col("is_a"), F.col("value").cast(dec)))
-            .cast("double")
-            .alias("s_a"),
-            F.sum(F.when(~F.col("is_a"), F.col("value").cast(dec)))
-            .cast("double")
-            .alias("s_b"),
-            F.sum(
-                F.when(
-                    F.col("is_a"),
-                    (F.col("value") * F.col("value")).cast(dec),
-                )
-            )
-            .cast("double")
-            .alias("q_a"),
-            F.sum(
-                F.when(
-                    ~F.col("is_a"),
-                    (F.col("value") * F.col("value")).cast(dec),
-                )
-            )
-            .cast("double")
-            .alias("q_b"),
-        )
+        .agg(*arm_power_sums())
     )
-    mean_a = F.col("s_a") / F.col("n_a")
-    mean_b = F.col("s_b") / F.col("n_b")
-    var_a = (
-        F.col("q_a") - F.col("s_a") * F.col("s_a") / F.col("n_a")
-    ) / (F.col("n_a") - 1)
-    var_b = (
-        F.col("q_b") - F.col("s_b") * F.col("s_b") / F.col("n_b")
-    ) / (F.col("n_b") - 1)
-    t = _welch_t_guarded_col(
-        F.round(
-            (mean_b - mean_a)
-            / F.sqrt(var_a / F.col("n_a") + var_b / F.col("n_b")),
-            4,
-        )
-    )
+    t = _welch_t_guarded_col(F.round(welch_t(), 4))
     tt = ws.select(
         "event_type", t.alias("t_stat"), F.abs(t).alias("abs_t")
     )
@@ -2056,64 +1814,12 @@ def stats_by_correction(spark: SparkSession, sf_dir: str) -> DataFrame:
     to five sufficient-statistic rows; ranking, the 5x5 critical
     join, and the cutoff scalar are constant-sized."""
     e = spark.table("events").where(F.col("value").isNotNull())
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":welch")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
-    dec = "decimal(28,6)"
     ws = (
-        e.select("event_type", "value", is_a.alias("is_a"))
+        e.select("event_type", "value", ab_arm(":welch").alias("is_a"))
         .groupBy("event_type")
-        .agg(
-            F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("n_a"),
-            F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("n_b"),
-            F.sum(F.when(F.col("is_a"), F.col("value").cast(dec)))
-            .cast("double")
-            .alias("s_a"),
-            F.sum(F.when(~F.col("is_a"), F.col("value").cast(dec)))
-            .cast("double")
-            .alias("s_b"),
-            F.sum(
-                F.when(
-                    F.col("is_a"),
-                    (F.col("value") * F.col("value")).cast(dec),
-                )
-            )
-            .cast("double")
-            .alias("q_a"),
-            F.sum(
-                F.when(
-                    ~F.col("is_a"),
-                    (F.col("value") * F.col("value")).cast(dec),
-                )
-            )
-            .cast("double")
-            .alias("q_b"),
-        )
+        .agg(*arm_power_sums())
     )
-    mean_a = F.col("s_a") / F.col("n_a")
-    mean_b = F.col("s_b") / F.col("n_b")
-    var_a = (
-        F.col("q_a") - F.col("s_a") * F.col("s_a") / F.col("n_a")
-    ) / (F.col("n_a") - 1)
-    var_b = (
-        F.col("q_b") - F.col("s_b") * F.col("s_b") / F.col("n_b")
-    ) / (F.col("n_b") - 1)
-    t = _welch_t_guarded_col(
-        F.round(
-            (mean_b - mean_a)
-            / F.sqrt(var_a / F.col("n_a") + var_b / F.col("n_b")),
-            4,
-        )
-    )
+    t = _welch_t_guarded_col(F.round(welch_t(), 4))
     tt = ws.select(
         "event_type", t.alias("t_stat"), F.abs(t).alias("abs_t")
     )
@@ -2580,67 +2286,21 @@ def stats_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     The mean difference is a terminating rational (sql_jround); the
     t's divide by an irrational SE and round plainly."""
     e = spark.table("events").where(F.col("value").isNotNull())
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":welch")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
-    dec = "decimal(28,6)"
     s = (
-        e.select("event_type", "value", is_a.alias("is_a"))
+        e.select("event_type", "value", ab_arm(":welch").alias("is_a"))
         .groupBy("event_type")
-        .agg(
-            F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("n_a"),
-            F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("n_b"),
-            F.sum(F.when(F.col("is_a"), F.col("value").cast(dec)))
-            .cast("double")
-            .alias("s_a"),
-            F.sum(F.when(~F.col("is_a"), F.col("value").cast(dec)))
-            .cast("double")
-            .alias("s_b"),
-            F.sum(
-                F.when(
-                    F.col("is_a"),
-                    (F.col("value") * F.col("value")).cast(dec),
-                )
-            )
-            .cast("double")
-            .alias("q_a"),
-            F.sum(
-                F.when(
-                    ~F.col("is_a"),
-                    (F.col("value") * F.col("value")).cast(dec),
-                )
-            )
-            .cast("double")
-            .alias("q_b"),
-        )
+        .agg(*arm_power_sums())
     )
-    diff = F.col("s_b") / F.col("n_b") - F.col("s_a") / F.col("n_a")
-    var_a = (
-        F.col("q_a") - F.col("s_a") * F.col("s_a") / F.col("n_a")
-    ) / (F.col("n_a") - 1)
-    var_b = (
-        F.col("q_b") - F.col("s_b") * F.col("s_b") / F.col("n_b")
-    ) / (F.col("n_b") - 1)
-    se2_t = var_a / F.col("n_a") + var_b / F.col("n_b")
-    se = F.sqrt(se2_t)
+    mean_a, mean_b, _, _ = arm_moments()
+    diff = mean_b - mean_a
+    se = F.sqrt(welch_se2())
     t_lo = F.round((diff + _TOST_DELTA) / se, 4)
     t_hi = F.round((_TOST_DELTA - diff) / se, 4)
     # Same Welch-Satterthwaite small-df guard as stats_welch_ttest
     # (VERDICT r7 ask #5 class closure): claiming equivalence with the
     # normal 1.645 below df 100 is anti-conservative. Df formula from
     # the shared common.welch_satterthwaite_df helper (ADVICE r8).
-    df_t = welch_satterthwaite_df(
-        var_a, var_b, F.col("n_a"), F.col("n_b")
-    )
+    df_t = welch_satterthwaite_df()
     return s.select(
         "event_type",
         "n_a",
@@ -2984,16 +2644,7 @@ def stats_sample_size_calc(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact on both engines (the argument is a rational whose
     ceiling is unambiguous at these magnitudes)."""
     per_user = spark.table("events").groupBy("user_id").agg(
-        F.when(
-            5
-            * F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            )
-            > F.count("*"),
-            1,
-        )
-        .otherwise(0)
-        .alias("converted")
+        converted_flag()
     )
     s = per_user.agg(
         F.count("*").alias("n_users"),
@@ -3099,31 +2750,18 @@ def stats_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     state); the estimator and its SE are scalar arithmetic on that
     single row."""
     e = spark.table("events").where(F.col("value").isNotNull())
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":welch")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
     is_post = F.col("ts") >= F.lit("2024-01-16").cast("timestamp")
-    dec = "decimal(28,6)"
     base = e.select(
-        "value", is_a.alias("is_a"), is_post.alias("is_post")
+        "value", ab_arm(":welch").alias("is_a"), is_post.alias("is_post")
     )
 
     def cell(a, p):
         cond = (F.col("is_a") == a) & (F.col("is_post") == p)
         return (
             F.count(F.when(cond, 1)).cast("bigint"),
-            F.sum(F.when(cond, F.col("value").cast(dec))).cast("double"),
+            F.sum(F.when(cond, F.col("value").cast(POWER_DEC))).cast("double"),
             F.sum(
-                F.when(cond, (F.col("value") * F.col("value")).cast(dec))
+                F.when(cond, (F.col("value") * F.col("value")).cast(POWER_DEC))
             ).cast("double"),
         )
 
@@ -3563,38 +3201,10 @@ def stats_bayesian_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers from the second, scalar arithmetic after; the posterior
     means/variances are exact rationals until the final z."""
     per_user = spark.table("events").groupBy("user_id").agg(
-        F.when(
-            5
-            * F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            )
-            > F.count("*"),
-            1,
-        )
-        .otherwise(0)
-        .alias("converted")
+        converted_flag()
     )
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":bayes")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
-    s = per_user.select(is_a.alias("is_a"), "converted").agg(
-        F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("n_a"),
-        F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("n_b"),
-        F.sum(F.when(F.col("is_a"), F.col("converted")).otherwise(0))
-        .cast("bigint")
-        .alias("conv_a"),
-        F.sum(F.when(~F.col("is_a"), F.col("converted")).otherwise(0))
-        .cast("bigint")
-        .alias("conv_b"),
+    s = per_user.select(ab_arm(":bayes").alias("is_a"), "converted").agg(
+        *arm_conversions()
     )
     mu_a = (1.0 + F.col("conv_a")) / (2.0 + F.col("n_a"))
     mu_b = (1.0 + F.col("conv_b")) / (2.0 + F.col("n_b"))
@@ -3695,17 +3305,7 @@ def stats_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     global ORDER BY is the point of the operator (a sequential test
     is inherently ordered) and costs one sort of user-grain rows."""
     per_user = spark.table("events").groupBy("user_id").agg(
-        F.min("ts").alias("first_ts"),
-        F.when(
-            5
-            * F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            )
-            > F.count("*"),
-            1,
-        )
-        .otherwise(0)
-        .alias("converted"),
+        F.min("ts").alias("first_ts"), converted_flag()
     )
     w = Window.orderBy("first_ts", "user_id")
     seqd = per_user.select(
@@ -4380,33 +3980,18 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("x")
     )
 
-    def assign(b: int):
-        return (
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("user_id").cast("string"),
-                        F.lit(f":perm{b}"),
-                    ).cast("binary")
-                ),
-                1,
-                1,
-            )
-            < "8"
-        )
-
     aggs = [
         F.sum(F.col("x").cast("decimal(28,6)")).cast("double").alias("tot"),
         F.count("*").alias("n"),
     ]
     for b in range(_PERM_B + 1):
         aggs.append(
-            F.sum(F.when(assign(b), F.col("x")))
+            F.sum(F.when(ab_arm(f":perm{b}"), F.col("x")))
             .cast("double")
             .alias(f"s{b}")
         )
         aggs.append(
-            F.count(F.when(assign(b), 1)).alias(f"c{b}")
+            F.count(F.when(ab_arm(f":perm{b}"), 1)).alias(f"c{b}")
         )
     s = per_user.agg(*aggs)
     diff_cols = F.array(
@@ -4516,56 +4101,13 @@ def stats_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after is scalar arithmetic. Degenerate segments
     (either arm < 2, zero pooled variance) emit NULL."""
     e = spark.table("events").where(F.col("value").isNotNull())
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":cohd")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
+    s = (
+        e.select("event_type", "value", ab_arm(":cohd").alias("is_a"))
+        .groupBy("event_type")
+        .agg(*arm_power_sums())
     )
-    s = e.select("event_type", "value", is_a.alias("is_a")).groupBy(
-        "event_type"
-    ).agg(
-        F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("n_a"),
-        F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("n_b"),
-        F.sum(
-            F.when(F.col("is_a"), F.col("value").cast("decimal(28,6)"))
-        )
-        .cast("double")
-        .alias("s_a"),
-        F.sum(
-            F.when(~F.col("is_a"), F.col("value").cast("decimal(28,6)"))
-        )
-        .cast("double")
-        .alias("s_b"),
-        F.sum(
-            F.when(
-                F.col("is_a"),
-                (F.col("value") * F.col("value")).cast("decimal(28,6)"),
-            )
-        )
-        .cast("double")
-        .alias("q_a"),
-        F.sum(
-            F.when(
-                ~F.col("is_a"),
-                (F.col("value") * F.col("value")).cast("decimal(28,6)"),
-            )
-        )
-        .cast("double")
-        .alias("q_b"),
-    )
-    mu_a = F.col("s_a") / F.col("n_a")
-    mu_b = F.col("s_b") / F.col("n_b")
-    sp2 = (
-        (F.col("q_a") - F.col("s_a") * F.col("s_a") / F.col("n_a"))
-        + (F.col("q_b") - F.col("s_b") * F.col("s_b") / F.col("n_b"))
-    ) / (F.col("n_a") + F.col("n_b") - 2)
+    mu_a, mu_b, _, _ = arm_moments()
+    sp2 = pooled_var()
     d = (mu_b - mu_a) / F.sqrt(sp2)
     return (
         s.where((F.col("n_a") >= 2) & (F.col("n_b") >= 2))
@@ -6721,21 +6263,9 @@ def stats_delta_method_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0),
         ).alias("y"),
     )
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":delta")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
     dec = "decimal(38,12)"
     mom = per_user.groupBy(
-        F.when(is_a, "A").otherwise("B").alias("arm")
+        F.when(ab_arm(":delta"), "A").otherwise("B").alias("arm")
     ).agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(F.col("x").cast(dec)).cast("double").alias("sx"),
@@ -7066,48 +6596,10 @@ def stats_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical single-scan constant-state collapse to
     BH; the step-down is one window over the five-row rank table."""
     e = spark.table("events").where(F.col("value").isNotNull())
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":welch")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
-    dec = "decimal(28,6)"
     ws = (
-        e.select("event_type", "value", is_a.alias("is_a"))
+        e.select("event_type", "value", ab_arm(":welch").alias("is_a"))
         .groupBy("event_type")
-        .agg(
-            F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("n_a"),
-            F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("n_b"),
-            F.sum(F.when(F.col("is_a"), F.col("value").cast(dec)))
-            .cast("double")
-            .alias("s_a"),
-            F.sum(F.when(~F.col("is_a"), F.col("value").cast(dec)))
-            .cast("double")
-            .alias("s_b"),
-            F.sum(
-                F.when(
-                    F.col("is_a"),
-                    (F.col("value") * F.col("value")).cast(dec),
-                )
-            )
-            .cast("double")
-            .alias("q_a"),
-            F.sum(
-                F.when(
-                    ~F.col("is_a"),
-                    (F.col("value") * F.col("value")).cast(dec),
-                )
-            )
-            .cast("double")
-            .alias("q_b"),
-        )
+        .agg(*arm_power_sums())
     )
     t = _welch_t_guarded_col(F.round(F.expr(_EXP_WELCH_T), 4))
     tt = ws.select(

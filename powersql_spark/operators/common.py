@@ -152,11 +152,119 @@ def sql_double_array(values) -> str:
     return "array(" + ",".join(sql_double(v) for v in values) + ")"
 
 
-def welch_satterthwaite_df(
-    var_a: Column, var_b: Column, n_a: Column, n_b: Column
-) -> Column:
-    """Welch-Satterthwaite effective degrees of freedom from the two
-    sample variances and group sizes:
+# ---------------------------------------------------------------------------
+# Experimentation (A/B) idioms. Every A/B key splits users into two arms
+# by one salted hash and reduces an arm-labelled frame (an ``is_a``
+# column beside ``value`` or ``converted``) to per-arm counts and sums;
+# the statistics read those sums by name. These are the one Spark-side
+# spelling of each idiom; the DuckDB oracles spell the same steps in SQL.
+# ---------------------------------------------------------------------------
+
+# Power sums are exact at this scale on both engines, so the two-arm
+# sufficient statistics are bit-identical across engines and partitionings.
+POWER_DEC = "decimal(28,6)"
+
+
+def ab_arm(salt: str | Column) -> Column:
+    """True for arm A of the salted ~50/50 user split: the first hex
+    digit of md5(user_id || salt) is below '8'. ``salt`` is a literal
+    or a column of salts. Oracle twin:
+    ``substr(md5(CAST(user_id AS VARCHAR) || salt), 1, 1) < '8'``."""
+    salt = F.lit(salt) if isinstance(salt, str) else salt
+    key = F.concat(F.col("user_id").cast("string"), salt).cast("binary")
+    return F.substring(F.md5(key), 1, 1) < "8"
+
+
+def converted_flag() -> Column:
+    """Per-user conversion bit ``converted`` for an aggregate grouped by
+    user: 1 when more than a fifth of the user's events are purchases
+    (an integer-exact ratio test, never a float compare)."""
+    purchases = F.sum(
+        F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+    )
+    return (
+        F.when(5 * purchases > F.count("*"), 1)
+        .otherwise(0)
+        .alias("converted")
+    )
+
+
+def arm_counts() -> list[Column]:
+    """``n_a``, ``n_b``: the rows in each arm of an ``is_a`` frame."""
+    is_a = F.col("is_a")
+    return [
+        F.count(F.when(is_a, 1)).cast("bigint").alias("n_a"),
+        F.count(F.when(~is_a, 1)).cast("bigint").alias("n_b"),
+    ]
+
+
+def arm_power_sums() -> list[Column]:
+    """:func:`arm_counts` plus each arm's sum ``s_a``/``s_b`` and sum of
+    squares ``q_a``/``q_b`` of ``value``, summed at :data:`POWER_DEC`."""
+    is_a, v = F.col("is_a"), F.col("value")
+
+    def arm_sum(arm: Column, x: Column) -> Column:
+        return F.sum(F.when(arm, x.cast(POWER_DEC))).cast("double")
+
+    return arm_counts() + [
+        arm_sum(is_a, v).alias("s_a"),
+        arm_sum(~is_a, v).alias("s_b"),
+        arm_sum(is_a, v * v).alias("q_a"),
+        arm_sum(~is_a, v * v).alias("q_b"),
+    ]
+
+
+def arm_conversions() -> list[Column]:
+    """:func:`arm_counts` plus the converted users ``conv_a``/``conv_b``
+    of each arm of an ``is_a``/``converted`` user frame."""
+    is_a, c = F.col("is_a"), F.col("converted")
+    return arm_counts() + [
+        F.sum(F.when(is_a, c).otherwise(0)).cast("bigint").alias("conv_a"),
+        F.sum(F.when(~is_a, c).otherwise(0)).cast("bigint").alias("conv_b"),
+    ]
+
+
+def _arm_ss(arm: str) -> Column:
+    """Sum of squared deviations ``q - s*s/n`` of arm ``"a"`` or ``"b"``,
+    from the :func:`arm_power_sums` columns."""
+    s = F.col(f"s_{arm}")
+    return F.col(f"q_{arm}") - s * s / F.col(f"n_{arm}")
+
+
+def arm_moments() -> tuple[Column, Column, Column, Column]:
+    """``(mean_a, mean_b, var_a, var_b)`` from the :func:`arm_power_sums`
+    columns; the variances are the unbiased (n - 1) sample variances."""
+    n_a, n_b = F.col("n_a"), F.col("n_b")
+    return (
+        F.col("s_a") / n_a,
+        F.col("s_b") / n_b,
+        _arm_ss("a") / (n_a - 1),
+        _arm_ss("b") / (n_b - 1),
+    )
+
+
+def pooled_var() -> Column:
+    """Pooled (equal-variance) sample variance of the two arms."""
+    n = F.col("n_a") + F.col("n_b")
+    return (_arm_ss("a") + _arm_ss("b")) / (n - 2)
+
+
+def welch_se2() -> Column:
+    """Squared standard error var_a/n_a + var_b/n_b of the mean
+    difference under unequal variances."""
+    _, _, var_a, var_b = arm_moments()
+    return var_a / F.col("n_a") + var_b / F.col("n_b")
+
+
+def welch_t() -> Column:
+    """Welch's t, (mean_b - mean_a) / sqrt(:func:`welch_se2`)."""
+    mean_a, mean_b, _, _ = arm_moments()
+    return (mean_b - mean_a) / F.sqrt(welch_se2())
+
+
+def welch_satterthwaite_df() -> Column:
+    """Welch-Satterthwaite effective degrees of freedom from the
+    :func:`arm_power_sums` columns:
     (v_a/n_a + v_b/n_b)^2 / ((v_a/n_a)^2/(n_a-1) + (v_b/n_b)^2/(n_b-1)).
 
     The ONE DataFrame-side definition shared by stats_welch_ttest,
@@ -165,7 +273,9 @@ def welch_satterthwaite_df(
     could silently diverge from the component's small-df verdict
     guard). The SQL twin is analytics._W_DF, which the same three
     oracles share by import."""
-    se2 = var_a / n_a + var_b / n_b
+    _, _, var_a, var_b = arm_moments()
+    n_a, n_b = F.col("n_a"), F.col("n_b")
+    se2 = welch_se2()
     return (se2 * se2) / (
         (var_a / n_a) * (var_a / n_a) / (n_a - 1)
         + (var_b / n_b) * (var_b / n_b) / (n_b - 1)

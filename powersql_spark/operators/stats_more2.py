@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from powersql_spark.operators.common import sql_jround
+from powersql_spark.operators.common import ab_arm, sql_jround
 from powersql_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -787,20 +787,8 @@ def stats_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the delta is closed-form per group. The pairwise definition never
     materializes any pair."""
     e = spark.table("events").where(F.col("value").isNotNull())
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":mwu")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
     vals = (
-        e.select("event_type", "value", is_a.alias("is_a"))
+        e.select("event_type", "value", ab_arm(":mwu").alias("is_a"))
         .groupBy("event_type", "value")
         .agg(
             F.count("*").alias("cnt"),
@@ -1260,20 +1248,8 @@ def stats_mood_scale_test(
     grid, one rank window, quarter-integer-exact score sums
     decimal-cast; the statistic is closed-form per group."""
     e = spark.table("events").where(F.col("value").isNotNull())
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":mwu")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
     vals = (
-        e.select("event_type", "value", is_a.alias("is_a"))
+        e.select("event_type", "value", ab_arm(":mwu").alias("is_a"))
         .groupBy("event_type", "value")
         .agg(
             F.count("*").alias("cnt"),

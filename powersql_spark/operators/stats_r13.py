@@ -24,7 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from powersql_spark.operators.common import sql_jround
+from powersql_spark.operators.common import (
+    ab_arm,
+    arm_moments,
+    arm_power_sums,
+    pooled_var,
+    sql_jround,
+)
 from powersql_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -1660,57 +1666,14 @@ def stats_hedges_g(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: six decimal-exact numbers per segment from ONE scan;
     everything after is scalar arithmetic."""
     e = spark.table("events").where(F.col("value").isNotNull())
-    is_a = (
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"), F.lit(":hedg")
-                ).cast("binary")
-            ),
-            1,
-            1,
-        )
-        < "8"
-    )
-    s = e.select("event_type", "value", is_a.alias("is_a")).groupBy(
-        "event_type"
-    ).agg(
-        F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("n_a"),
-        F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("n_b"),
-        F.sum(
-            F.when(F.col("is_a"), F.col("value").cast("decimal(28,6)"))
-        )
-        .cast("double")
-        .alias("s_a"),
-        F.sum(
-            F.when(~F.col("is_a"), F.col("value").cast("decimal(28,6)"))
-        )
-        .cast("double")
-        .alias("s_b"),
-        F.sum(
-            F.when(
-                F.col("is_a"),
-                (F.col("value") * F.col("value")).cast("decimal(28,6)"),
-            )
-        )
-        .cast("double")
-        .alias("q_a"),
-        F.sum(
-            F.when(
-                ~F.col("is_a"),
-                (F.col("value") * F.col("value")).cast("decimal(28,6)"),
-            )
-        )
-        .cast("double")
-        .alias("q_b"),
+    s = (
+        e.select("event_type", "value", ab_arm(":hedg").alias("is_a"))
+        .groupBy("event_type")
+        .agg(*arm_power_sums())
     )
     n_a, n_b = F.col("n_a"), F.col("n_b")
-    mu_a = F.col("s_a") / n_a
-    mu_b = F.col("s_b") / n_b
-    sp2 = (
-        (F.col("q_a") - F.col("s_a") * F.col("s_a") / n_a)
-        + (F.col("q_b") - F.col("s_b") * F.col("s_b") / n_b)
-    ) / (n_a + n_b - 2)
+    mu_a, mu_b, _, _ = arm_moments()
+    sp2 = pooled_var()
     d = (mu_b - mu_a) / F.sqrt(sp2)
     jcorr = 1.0 - 3.0 / (4.0 * (n_a + n_b) - 9.0)
     return (

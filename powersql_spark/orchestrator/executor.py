@@ -67,7 +67,7 @@ class SparkExecutor:
             df = self.spark.sql(model.query)
             df.write.mode("overwrite").parquet(path)
             reader = self.spark.read.schema(df.schema)
-            reader.parquet(path).createOrReplaceTempView(model.name)
+            reader.parquet(path).createOrReplaceTempView(_q(model.name))
             return df.schema
         raise ValueError(f"unknown model kind: {model.kind}")  # pragma: no cover
 
@@ -83,7 +83,7 @@ class SparkExecutor:
             self.execute(model)
             return
         reader = self.spark.read.schema(schema)
-        reader.parquet(path).createOrReplaceTempView(model.name)
+        reader.parquet(path).createOrReplaceTempView(_q(model.name))
 
     def analyze(self, model: Model) -> DataFrame:
         """Analysis only — no job runs. Spark's analyzer is the type
@@ -91,7 +91,7 @@ class SparkExecutor:
         Registers the analyzed plan as a temp view so downstream models
         resolve against it."""
         df = self.spark.sql(model.query)
-        df.createOrReplaceTempView(model.name)
+        df.createOrReplaceTempView(_q(model.name))
         return df
 
     def query_bool(self, conditions: list[str]) -> list[bool]:

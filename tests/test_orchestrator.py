@@ -292,6 +292,46 @@ def test_backtick_ref_orders_the_run(spark, tmp_path):
     assert spark.table("quoted").collect()[0]["s"] == "a'b"
 
 
+def test_quoted_model_names_work_in_every_command(spark, tmp_path, capsys):
+    """Quoted model names that are not plain identifiers: a TABLE
+    `my model`, a VIEW `a-b` and a view reading both pass check, run,
+    run --changed (which restores the TABLE from target/) and test."""
+    from powersql_spark.orchestrator.runner import check, run
+    from powersql_spark.orchestrator.runner import test as run_tests
+
+    (tmp_path / "powersql.toml").write_text(
+        '[project]\nname = "quoted"\nmodels = ["models"]\ntests = ["tests"]\n'
+    )
+    models = tmp_path / "models"
+    models.mkdir()
+    (models / "a.sql").write_text("CREATE TABLE `my model` AS SELECT 1 AS n")
+    (models / "b.sql").write_text(
+        "CREATE VIEW `a-b` AS SELECT n + 1 AS n FROM `my model`"
+    )
+    (models / "c.sql").write_text(
+        "CREATE VIEW downstream AS SELECT m.n + ab.n AS n"
+        " FROM `my model` m CROSS JOIN `a-b` ab"
+    )
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "t.sql").write_text(
+        "ASSERT (SELECT n FROM downstream) = 3"
+        " AND (SELECT n FROM `a-b`) = 2 AS 'quoted names';"
+    )
+    assert set(check(spark, tmp_path, sources=SOURCES)) == {
+        "my model", "a-b", "downstream"
+    }
+    assert run(spark, tmp_path, sources=SOURCES) == [
+        "my model", "a-b", "downstream"
+    ]
+    (models / "c.sql").write_text(
+        "CREATE VIEW downstream AS SELECT m.n + ab.n + 0 AS n"
+        " FROM `my model` m CROSS JOIN `a-b` ab"
+    )
+    assert run(spark, tmp_path, sources=SOURCES, changed=True) == ["downstream"]
+    assert run_tests(spark, tmp_path, sources=SOURCES) == 0
+    assert "quoted names...OK" in capsys.readouterr().out
+
+
 # ---------- DAG (reference src/main.rs:489-548) ----------
 
 
@@ -693,9 +733,9 @@ def test_run_changed_new_model_runs_and_banks(spark, tmp_path):
 
 
 def test_wide_example_runs_parallel_and_serial(spark, tmp_path):
-    """The examples/wide DAG (orchestrator bench fixture: 8 independent
-    table models + fan-in summary) must produce identical results in
-    both modes. Runs on a copy, so no target/ is left in the checkout."""
+    """The examples/wide DAG (the parallel example project: 8
+    independent table models + fan-in summary) must produce identical
+    results in both modes. Runs on a copy, so no target/ is left in the checkout."""
     import os
 
     from powersql_spark.orchestrator.runner import run
