@@ -1381,8 +1381,8 @@ def stats_risk_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE partial-aggregated scan to four numbers."""
     adj = _two_by_two(spark)
-    a, b = F.col("a") + F.col("h"), F.col("b") + F.col("h")
-    c, d = F.col("c") + F.col("h"), F.col("d") + F.col("h")
+    a = F.col("a") + F.col("h")
+    c = F.col("c") + F.col("h")
     n1 = F.col("a") + F.col("b") + 2 * F.col("h")
     n0 = F.col("c") + F.col("d") + 2 * F.col("h")
     rr = (a / n1) / (c / n0)

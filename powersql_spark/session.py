@@ -156,6 +156,28 @@ def build_session(
         # error messages is lost. Static conf, so it must be set at
         # build time (the driver's vanilla sessions keep the default).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Keep every generated class of a sweep resident. Spark's codegen
+        # cache holds 100 classes by default; the five perfbench keys at
+        # sf0.001 need ~170, so each warm pass evicted and recompiled
+        # 139 of them (1.5 s of Janino per pass). Measured working set of
+        # the 63 bench.HEADLINE keys with an unbounded cache: 1,188
+        # distinct classes on the cold pass at sf0.001, 1,166 at sf0.1
+        # (AQE picks other joins there); 1,095 and 1,073 with the
+        # class-name setting below. 2048 covers either with headroom. A
+        # cap, not a reservation: Metaspace grows only with the classes
+        # a session generates (190 MB after a three-pass headline sweep
+        # at sf0.001, against 182 MB live at the default). Static conf,
+        # read once per JVM at the first compile, so it must be set at
+        # build time.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # The cache is keyed on source text, and a whole-stage class is
+        # named after its codegen stage id, which AQE assigns as it plans
+        # each stage and which differs from call to call. The same stage
+        # then got a new name, and a new compile: 13 of the 14 headline
+        # keys that kept compiling on warm passes did so only for this
+        # (the 14th, graph_betweenness, varies its broadcast build side).
+        # Plans are unchanged; only stack traces lose the id.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     local_dirs = _local_dirs(master)
     if local_dirs:
